@@ -31,6 +31,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -55,6 +56,8 @@ RESULTS_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
+# RESULTS_SCHEMA plus the url join-back (run_queries(join_urls=True))
+_URL_RESULTS_SCHEMA = "qid string, rank int, doc_id long, url string, score double"
 
 
 @dataclass
@@ -578,8 +581,6 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> np.ndarray:
     hence the distinct."""
     import os
 
-    from pyspark.errors import AnalysisException
-
     from find_that_charity_spark.plans.checkpoint import strip_file_scheme
 
     path = f"{index_dir}/tombstones"
@@ -998,13 +999,13 @@ class IndexSearcher:
         keys = sorted({key for t in qterms for key in deletion_keys(t)})
         try:
             cand = (
-                self.spark.read.parquet(f"{self.index_dir}/fuzzy_keys")
+                cached_parquet(self.spark, f"{self.index_dir}/fuzzy_keys")
                 .where(F.col("key").isin(keys))
                 .select("term")
                 .distinct()
                 .collect()
             )
-        except Exception:
+        except AnalysisException:  # pre-fuzzy_keys index: no such table
             from functools import reduce
 
             conds = [
@@ -1118,7 +1119,7 @@ def _analyze_batch_driver(
                 .distinct()
                 .collect()
             ]
-        except Exception:
+        except AnalysisException:  # pre-fuzzy_keys index: no such table
             all_q = sorted({t for _, _, qts in fuzzy_qs for t in qts})
             from functools import reduce
 
@@ -1202,18 +1203,27 @@ def in_list(col: str, values) -> "F.Column":
     each, measured — 0.2 s of pure driver time for a 300-id list); above
     a small size the same In expression is built by the SQL parser from
     one string instead. Identical semantics and identical parquet
-    pushdown (it IS the same ``In`` Catalyst node). Values must be ints
-    or strings; strings are quote-escaped."""
-    vals = list(values)
-    if len(vals) <= 32:
-        return F.col(col).isin(vals)
-    parts = []
-    for v in vals:
+    pushdown (it IS the same ``In`` Catalyst node). Values must be
+    strings or integers (Python or numpy; ``bool`` and ``float`` raise
+    ``TypeError`` rather than being truncated); strings are
+    quote-escaped and the column name backtick-quoted."""
+    vals = []
+    for v in values:
         if isinstance(v, str):
-            parts.append("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'")
+            vals.append(v)
+        elif isinstance(v, (int, np.integer)) and not isinstance(v, bool):
+            vals.append(int(v))
         else:
-            parts.append(str(int(v)))
-    return F.expr(f"`{col}` IN ({', '.join(parts)})")
+            raise TypeError(f"in_list values must be str or int, got {type(v).__name__}")
+    ident = "`" + col.replace("`", "``") + "`"
+    if len(vals) <= 32:
+        return F.col(ident).isin(vals)
+    parts = [
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, str) else str(v)
+        for v in vals
+    ]
+    return F.expr(f"{ident} IN ({', '.join(parts)})")
 
 
 def _driver_score_max_postings() -> int:
@@ -1222,6 +1232,13 @@ def _driver_score_max_postings() -> int:
     far below driver comfort; production tunes it via env. 0 disables the
     driver tail entirely (every batch scores distributed)."""
     return int(os.environ.get("FTC_DRIVER_SCORE_MAX_POSTINGS", "2000000"))
+
+
+def _fits_driver_budget(matched_rows: list[tuple]) -> bool:
+    """The driver-tail routing rule: the batch's exact postings volume
+    (sum of matched df, the 8th field of a matched row) is within
+    ``_driver_score_max_postings()``."""
+    return sum(int(r[7]) for r in matched_rows) <= _driver_score_max_postings()
 
 
 def _score_driver(
@@ -1234,12 +1251,21 @@ def _score_driver(
     tomb: np.ndarray,
     include_arr: "np.ndarray | None",
     join_urls: bool,
-) -> DataFrame:
+    exclude_by_qid: "dict[str, np.ndarray] | None" = None,
+) -> pd.DataFrame:
     """Driver-side twin of :func:`_score_matched` for small batches with
     bounded postings volume (see run_queries): ONE pushed IN-list segments
     job fetches the query terms' posting rows, the same
     ``make_query_scorer`` kernel scores them in-process, and the url
-    join-back becomes a pushed IN-list docs probe over the k result ids.
+    join-back becomes ONE pushed IN-list docs probe over the union of the
+    result ids. Returns the pandas frame (qid, rank, doc_id[, url], score)
+    ordered by (qid, rank) — no Spark relation is built.
+
+    ``exclude_by_qid``: per-qid doc ids barred on top of ``tomb`` (one
+    reconcile signature's property filter), so queries with different
+    filter contexts share one fetch and one url probe. Qids sharing the
+    same array object share one exclusion union.
+
     Semantics are identical by construction — same scorer, same per-qid
     grouping, same inner-join url attach — and the batched-path equality
     is pinned by tests."""
@@ -1251,14 +1277,24 @@ def _score_driver(
         .where(in_list("term", terms))
         .select("term", "min_doc", "max_doc", "has_positions", "postings", "blockmax")
         .collect()
+        if terms else []
     )
     by_term: dict[str, list] = {}
     for sr in seg_rows:
         by_term.setdefault(sr["term"], []).append(sr)
-    scorer = make_query_scorer(
-        n_docs, avgdl, use_bmw=use_bmw,
-        tombstones=tomb if tomb.size else None, include=include_arr,
-    )
+    scorers: dict = {}  # id(extra exclusion array) or None -> scorer
+
+    def scorer_for(qid: str):
+        extra = (exclude_by_qid or {}).get(qid)
+        key = None if extra is None else id(extra)
+        if key not in scorers:
+            barred = tomb if extra is None else np.union1d(tomb, extra)
+            scorers[key] = make_query_scorer(
+                n_docs, avgdl, use_bmw=use_bmw,
+                tombstones=barred if barred.size else None, include=include_arr,
+            )
+        return scorers[key]
+
     by_qid: dict[str, list] = {}
     for r in matched_rows:
         by_qid.setdefault(r[0], []).append(r)
@@ -1279,7 +1315,7 @@ def _score_driver(
                 )
         if not recs:
             continue
-        out = scorer(pd.DataFrame(recs, columns=cols))
+        out = scorer_for(qid)(pd.DataFrame(recs, columns=cols))
         if len(out):
             frames.append(out)
     if frames:
@@ -1292,7 +1328,7 @@ def _score_driver(
              "score": pd.Series([], dtype=np.float64)}
         )
     if not join_urls:
-        return spark.createDataFrame(res, schema=RESULTS_SCHEMA)
+        return res
     url_of: dict[int, str] = {}
     if len(res):
         ids = sorted({int(d) for d in res["doc_id"]})
@@ -1308,10 +1344,7 @@ def _score_driver(
         keep = res["doc_id"].map(lambda d: int(d) in url_of)
         res = res[keep].reset_index(drop=True)
     res = res.assign(url=[url_of[int(d)] for d in res["doc_id"]])
-    res = res[["qid", "rank", "doc_id", "url", "score"]]
-    return spark.createDataFrame(
-        res, schema="qid string, rank int, doc_id long, url string, score double"
-    )
+    return res[["qid", "rank", "doc_id", "url", "score"]]
 
 
 def run_queries(
@@ -1397,11 +1430,13 @@ def run_queries(
         # exceeds the bound (the 100-TB stop-word case) keeps the
         # distributed scoring tail. Guard is parameterised, never a
         # result cache: every call re-reads the store.
-        total_postings = sum(int(r[7]) for r in matched_rows)
-        if (not doc_shards or doc_shards <= 1) and total_postings <= _driver_score_max_postings():
-            return _score_driver(
-                spark, index_dir, matched_rows, n_docs, avgdl, use_bmw,
-                tomb, include_arr, join_urls,
+        if (not doc_shards or doc_shards <= 1) and _fits_driver_budget(matched_rows):
+            return spark.createDataFrame(
+                _score_driver(
+                    spark, index_dir, matched_rows, n_docs, avgdl, use_bmw,
+                    tomb, include_arr, join_urls,
+                ),
+                _URL_RESULTS_SCHEMA if join_urls else RESULTS_SCHEMA,
             )
         matched_local = spark.createDataFrame(matched_rows, _MATCHED_SCHEMA)
         # row layout follows _MATCHED_SCHEMA: bucket is the 9th field
@@ -1523,7 +1558,7 @@ def run_queries(
         cand_terms = cached_parquet(spark, f"{index_dir}/fuzzy_keys").select(
             "key", "term"
         )
-    except Exception:  # older index without fuzzy_keys: expand inline
+    except AnalysisException:  # older index without fuzzy_keys: expand inline
         cand_terms = dictionary.select(
             "term",
             F.explode(deletion_keys_expr("term")).alias("key"),

@@ -12,9 +12,14 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from find_that_charity_spark.operators import query
 from find_that_charity_spark.operators.query import cached_parquet, run_queries
 
 
@@ -61,6 +66,39 @@ def _filter_exclusions(spark: SparkSession, index_dir: str, props) -> "list[int]
     )
 
 
+def _driver_pass(
+    spark: SparkSession,
+    index_dir: str,
+    qrows: list[dict],
+    exclude_by_qid: "dict[str, np.ndarray] | None" = None,
+) -> "pd.DataFrame | None":
+    """Score a small batch in ONE driver-route pass, with no Spark relation
+    built or collected: one parse (a dictionary probe job only for terms
+    the driver has not resolved before), one pushed segments fetch for the
+    union of the batch's terms and buckets, one ``_score_driver`` call that
+    scores every qid under its own exclusion set, and one pushed url probe
+    for the union of the result ids.
+
+    Returns the pandas (qid, rank, doc_id, url, score) frame, or None when
+    the batch is over ``run_queries``' driver bounds (more than 10,000
+    queries, or more postings than ``_driver_score_max_postings()``): the
+    caller then takes the distributed route. Query functions are looked
+    up through the module so a wrapped (traced) one is the one called."""
+    if len(qrows) > 10_000:
+        return None
+    n_docs, avgdl = query.load_stats(spark, index_dir)
+    tomb = query.read_tombstones(spark, index_dir)
+    matched = query._analyze_batch_driver(
+        spark, index_dir, cached_parquet(spark, f"{index_dir}/dictionary"), qrows
+    )
+    if not query._fits_driver_budget(matched):
+        return None
+    return query._score_driver(
+        spark, index_dir, matched, n_docs, avgdl, True, tomb, None,
+        join_urls=True, exclude_by_qid=exclude_by_qid,
+    )
+
+
 def reconcile(
     spark: SparkSession, index_dir: str, batch: dict[str, dict[str, Any]]
 ) -> dict[str, dict[str, Any]]:
@@ -78,8 +116,16 @@ def reconcile(
     v0.2 constraint fields (VERDICT r03 item 9): ``type`` other than
     RECON_TYPE matches nothing; ``properties`` compile to metadata
     exclusions applied at scoring (filter context — scores unchanged,
-    top-k exact over the allowed set). Queries sharing a constraint
-    signature run as one batch."""
+    top-k exact over the allowed set), one exclusion set per constraint
+    signature.
+
+    Spark jobs per batch: on the driver route (at most 10,000 queries and
+    the batch's postings within ``_driver_score_max_postings()``, decided
+    once for the whole batch) one docs scan per FILTERED signature, plus
+    one postings fetch and one url probe for the whole batch, plus one
+    dictionary probe only when the batch has terms the driver has not
+    seen before. Over either bound each signature runs ``run_queries``
+    on its own (the distributed route)."""
     import json
 
     groups: dict[str, list[str]] = {}
@@ -89,51 +135,53 @@ def reconcile(
         )
         groups.setdefault(sig, []).append(qid)
 
-    res = []
+    kept: list[tuple[list[dict], "np.ndarray | None"]] = []  # (qrows, exclusions)
     for sig, qids in groups.items():
         spec = json.loads(sig)
         qtype = spec.get("type")
         if qtype is not None and qtype != RECON_TYPE:
             continue  # wrong entity type: no candidates for these qids
         excl = _filter_exclusions(spark, index_dir, spec.get("properties"))
-        rows = [
-            (qid, batch[qid].get("query", ""), int(batch[qid].get("limit", 10)), "recon")
-            for qid in qids
-        ]
-        # the batch is already driver-side — hand the rows to run_queries
-        # (skips its take_wide size-probe job); a giant batch (beyond the
-        # small-batch threshold) falls back to the distributed probe
         qrows = [
-            {"qid": q, "text": t, "k": kk, "mode": m} for q, t, kk, m in rows
+            {"qid": q, "text": batch[q].get("query", ""),
+             "k": int(batch[q].get("limit", 10)), "mode": "recon"}
+            for q in qids
         ]
-        qdf = spark.createDataFrame(rows, "qid string, text string, k int, mode string")
-        import numpy as np
+        kept.append((qrows, np.array(excl, dtype=np.int64) if excl else None))
 
-        res.extend(
-            run_queries(
-                spark, index_dir, qdf, join_urls=True,
-                exclude_doc_ids=np.array(excl, dtype=np.int64) if excl else None,
-                prefetched_qrows=qrows if len(qrows) <= 10_000 else None,
-            ).collect()
-        )
+    res = _driver_pass(
+        spark, index_dir, [r for qrows, _ in kept for r in qrows],
+        {r["qid"]: excl for qrows, excl in kept if excl is not None for r in qrows},
+    )
+    if res is not None:
+        hits = list(res[["qid", "rank", "url", "score"]].itertuples(index=False, name=None))
+    else:
+        hits = []
+        for qrows, excl in kept:
+            qdf = spark.createDataFrame(
+                [(r["qid"], r["text"], r["k"], r["mode"]) for r in qrows],
+                "qid string, text string, k int, mode string",
+            )
+            hits.extend(
+                (r["qid"], r["rank"], r["url"], r["score"])
+                for r in run_queries(
+                    spark, index_dir, qdf, join_urls=True, exclude_doc_ids=excl,
+                    prefetched_qrows=qrows if len(qrows) <= 10_000 else None,
+                ).collect()
+            )
 
     by_q: dict[str, list] = {qid: [] for qid in batch}
-    for r in sorted(res, key=lambda r: (r["qid"], r["rank"])):
-        by_q[r["qid"]].append(r)
+    for qid, _rank, url, score in sorted(hits, key=lambda h: (h[0], h[1])):
+        by_q[qid].append((url, float(score)))
     out: dict[str, dict[str, Any]] = {}
-    for qid, hits in by_q.items():
+    for qid, cands in by_q.items():
         results = []
-        for i, h in enumerate(hits):
-            confident = len(hits) == 1 or (
-                i == 0 and len(hits) > 1 and h["score"] >= 1.5 * hits[1]["score"]
+        for i, (url, score) in enumerate(cands):
+            confident = len(cands) == 1 or (
+                i == 0 and len(cands) > 1 and score >= 1.5 * cands[1][1]
             )
             results.append(
-                {
-                    "id": h["url"],
-                    "name": h["url"],
-                    "score": float(h["score"]),
-                    "match": bool(i == 0 and confident),
-                }
+                {"id": url, "name": url, "score": score, "match": bool(i == 0 and confident)}
             )
         out[qid] = {"result": results}
     return out
@@ -230,7 +278,7 @@ def suggest_spelling(
                 .collect()
             }
         )
-    except Exception:
+    except AnalysisException:
         # pre-fuzzy_keys index: levenshtein-filtered scan (the filter runs
         # JVM-side; only the tiny candidate set reaches the driver — never
         # collect the whole dictionary)
@@ -274,11 +322,13 @@ def add_to_csv(
     Adds ``match_url`` and ``match_score`` columns (null when no hit).
     The user table keeps its row identity via a deterministic qid.
 
-    Small tables (the interactive add-to-CSV regime) dedup their queries
-    and join the matches back DRIVER-side — with run_queries' small-batch
-    shortcut the whole call is a handful of jobs instead of the shuffle
+    Small tables (the interactive add-to-CSV regime) dedup their queries,
+    score them in the same single driver-route pass as ``reconcile``
+    (one postings fetch, one url probe) and join the matches back
+    DRIVER-side — a handful of jobs instead of the shuffle
     (dropDuplicates) + broadcast-join stage fan the distributed plan
-    needs (VERDICT r03 item 8). Large tables keep the distributed plan."""
+    needs (VERDICT r03 item 8). Large tables, and small ones over the
+    driver postings budget, keep the distributed plan."""
     from find_that_charity_spark.operators.query import take_wide
 
     # a caller that already holds the table driver-side passes the rows
@@ -286,6 +336,7 @@ def add_to_csv(
     # user_df): the take_wide size probe on a pickled-RDD-backed local
     # relation costs a ~0.3 s Python-worker job (optimization round 6)
     probe = prefetched_rows if prefetched_rows is not None else take_wide(user_df, 10_001)
+    res = None
     if len(probe) <= 10_000:
         seen: dict[str, None] = {}
         for r in probe:
@@ -298,30 +349,15 @@ def add_to_csv(
         import hashlib
 
         qid_of = {q: hashlib.md5(q.encode("utf-8")).hexdigest() for q in seen}
-        from pyspark.sql import Row
-
-        qrows = [Row(qid=qid_of[q], text=q, k=1, mode="recon") for q in seen]
-        qdf = spark.createDataFrame(
-            [tuple(r) for r in qrows],
-            "qid string, text string, k int, mode string",
+        res = _driver_pass(
+            spark, index_dir,
+            [{"qid": qid_of[q], "text": q, "k": 1, "mode": "recon"} for q in seen],
         )
-        # rank without the url join-back: the top doc ids are collected
-        # anyway, so one pushed IN-list docs lookup replaces a docs-table
-        # broadcast join (the scan reads only matching row groups); the
-        # batch rows ride along driver-side, skipping the probe job
-        res = run_queries(spark, index_dir, qdf, prefetched_qrows=qrows).collect()
-        top = [r for r in res if r["rank"] == 1 and r["score"] >= match_threshold]
-        url_of = {}
-        if top:
-            ids = sorted({int(r["doc_id"]) for r in top})
-            url_of = {
-                r["doc_id"]: r["url"]
-                for r in cached_parquet(spark, f"{index_dir}/docs")
-                .where(F.col("doc_id").isin(ids))
-                .select("doc_id", "url")
-                .collect()
-            }
-        by_qid = {r["qid"]: (url_of[r["doc_id"]], float(r["score"])) for r in top}
+    if res is not None:
+        top = res[res["score"] >= match_threshold]  # k=1: one row per hit qid
+        by_qid = {
+            q: (u, float(sc)) for q, u, sc in zip(top["qid"], top["url"], top["score"])
+        }
         out_rows = []
         for r in probe:
             q = r[query_col]
@@ -329,7 +365,10 @@ def add_to_csv(
             out_rows.append(
                 (*r, hit[0] if hit else None, hit[1] if hit else None)
             )
-        schema = user_df.schema.add("match_url", "string").add("match_score", "double")
+        # add() to a copy: DataFrame.schema is cached per DataFrame and
+        # add() mutates in place, which would grow the caller's schema
+        schema = StructType(list(user_df.schema.fields)) \
+            .add("match_url", "string").add("match_score", "double")
         # Arrow-backed local relation (optimization round 6 batch 3): a
         # plain-list createDataFrame parallelizes into defaultParallelism
         # pickled slices, so the caller's collect paid ~0.4 s of Python-
@@ -337,16 +376,14 @@ def add_to_csv(
         # the JVM evaluates without Python workers. Fallback for user
         # column types Arrow can't convert keeps the old path.
         try:
-            import pandas as _pd
-
-            pdf = _pd.DataFrame(
+            pdf = pd.DataFrame(
                 out_rows, columns=[f.name for f in schema.fields]
             ).astype(object)
             # missing values must reach Spark as NULL, not float NaN: the
             # non-Arrow createDataFrame path would otherwise ship NaN,
             # and CAST(NaN AS BIGINT) is 0 — observably different from a
             # null match_score (caught by the driver-style verify run)
-            pdf = pdf.where(_pd.notnull(pdf), None)
+            pdf = pdf.where(pd.notnull(pdf), None)
             return spark.createDataFrame(pdf, schema)
         except Exception:
             return spark.createDataFrame(out_rows, schema)
@@ -357,8 +394,8 @@ def add_to_csv(
         F.lit(1).alias("k"),
         F.lit("recon").alias("mode"),
     ).dropDuplicates(["qid"])
-    res = run_queries(spark, index_dir, qdf, join_urls=True).where(F.col("rank") == 1)
-    matches = res.select(
+    ranked = run_queries(spark, index_dir, qdf, join_urls=True).where(F.col("rank") == 1)
+    matches = ranked.select(
         F.col("qid").alias("_qid"),
         F.col("url").alias("match_url"),
         F.col("score").alias("match_score"),

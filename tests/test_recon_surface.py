@@ -159,3 +159,132 @@ def test_reconcile_type_and_properties(spark, index):
     assert mixed["a"] == plain["q0"]
     assert mixed["b"] == filtered["q0"]
     assert mixed["c"]["result"] == []
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, index):
+    """(doc_ids, texts, lang_of) of the live corpus, doc_id order."""
+    import os
+
+    docs = spark.read.parquet(f"{index}/docs").select("doc_id", "url", "lang").toPandas()
+    fx = os.path.join(os.path.dirname(index), "fx")
+    pages = spark.read.parquet(f"{fx}/web_pages.parquet").toPandas()
+    latest = pages.sort_values("warc_ts").groupby("url").tail(1)
+    live = docs.merge(latest[["url", "text"]], on="url").sort_values("doc_id")
+    return (
+        live["doc_id"].tolist(),
+        live["text"].tolist(),
+        dict(zip(live["doc_id"].tolist(), live["lang"].tolist())),
+        dict(zip(live["doc_id"].tolist(), live["url"].tolist())),
+    )
+
+
+def _mixed_batch():
+    lang = lambda v: [{"pid": "lang", "v": v}]  # noqa: E731
+    return {
+        "u": {"query": ENTITY_NAMES[0], "limit": 10},
+        "e": {"query": ENTITY_NAMES[0], "limit": 10, "properties": lang("en")},
+        "s": {"query": ENTITY_NAMES[4], "limit": 3, "properties": lang("es")},
+        "s2": {"query": "north star educaton society", "limit": 10, "properties": lang("es")},
+        "w": {"query": ENTITY_NAMES[2], "limit": 10, "type": "organisation"},
+    }
+
+
+def test_reconcile_warm_mixed_batch_is_three_jobs(spark, index):
+    """On the driver route a warm batch with an unfiltered, a lang-filtered
+    and a wrong-type qid costs three Spark jobs: the filter's docs scan,
+    one postings fetch and one url probe for the whole batch."""
+    batch = {
+        "a": {"query": ENTITY_NAMES[0], "limit": 10},
+        "b": {"query": ENTITY_NAMES[1], "limit": 10,
+              "properties": [{"pid": "lang", "v": "en"}]},
+        "c": {"query": ENTITY_NAMES[2], "limit": 10, "type": "organisation"},
+    }
+    want = reconcile(spark, index, batch)  # warm readers, stats, dictionary probe
+    assert want["a"]["result"] and want["b"]["result"]
+    assert want["c"]["result"] == []
+    sc = spark.sparkContext
+    sc.setJobGroup("recon_warm_jobs", "warm reconcile job count")
+    try:
+        got = reconcile(spark, index, batch)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("recon_warm_jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want
+    assert n_jobs == 3, f"{n_jobs} jobs (expected 3: filter, fetch, url probe)"
+
+
+def test_reconcile_signatures_share_one_pass(spark, index, corpus):
+    """Two lang signatures and an unfiltered query in one batch answer
+    exactly as one-signature calls do, and as the brute-force oracle
+    restricted to each query's allowed set."""
+    from find_that_charity_spark.functions.analyzer import analyze, analyze_name
+    from find_that_charity_spark.operators.oracle import brute_force_topk
+
+    ids, texts, lang_of, url_of = corpus
+    batch = _mixed_batch()
+    got = reconcile(spark, index, batch)
+    assert set(got) == set(batch)
+    assert got["w"]["result"] == []
+    for qid, q in batch.items():
+        assert got[qid] == reconcile(spark, index, {qid: q})[qid], qid
+        if qid == "w":
+            continue
+        lang = (q.get("properties") or [{}])[0].get("v")
+        include = None if lang is None else [d for d in ids if lang_of[d] == lang]
+        want = brute_force_topk(
+            ids, texts, q["query"], q["limit"], analyzer=analyze,
+            query_analyzer=analyze_name, include=include,
+        )
+        hits = got[qid]["result"]
+        assert hits, qid
+        assert [h["id"] for h in hits] == [url_of[d] for d, _ in want], qid
+        assert [h["score"] for h in hits] == pytest.approx([s for _, s in want], rel=1e-9)
+
+
+def test_reconcile_over_budget_takes_distributed_route(spark, index, monkeypatch):
+    """A batch over the driver postings budget runs run_queries per
+    signature on the distributed route, with the same response."""
+    from find_that_charity_spark.operators import query
+
+    batch = _mixed_batch()
+    want = reconcile(spark, index, batch)
+    routes = []
+    orig = query._score_matched
+
+    def counted(*a, **k):
+        routes.append("distributed")
+        return orig(*a, **k)
+
+    def refuse(*a, **k):
+        raise AssertionError("driver route taken over budget")
+
+    monkeypatch.setattr(query, "_score_matched", counted)
+    monkeypatch.setattr(query, "_score_driver", refuse)
+    monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
+    got = reconcile(spark, index, batch)
+    assert routes == ["distributed"] * 3  # one per kept signature
+    assert got == want
+
+
+def test_add_to_csv_repeat_and_over_budget(spark, index, monkeypatch):
+    """A second call on the same table answers the same (the output schema
+    must not grow the caller's cached schema); over the driver budget a
+    small table takes the distributed plan, with the same enriched rows
+    (NULLs included)."""
+    user = spark.createDataFrame(
+        [("r1", ENTITY_NAMES[0]), ("r2", "acme charitable trust"),
+         ("r3", "qqqq zzzz"), ("r4", None)],
+        "row_id string, org_name string",
+    )
+
+    def rows():
+        return sorted(tuple(r) for r in add_to_csv(spark, index, user, "org_name").collect())
+
+    want = rows()
+    assert [r[2] is None for r in want] == [False, False, True, True]
+    assert rows() == want
+    assert len(user.schema.fields) == 2
+    monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
+    assert rows() == want
