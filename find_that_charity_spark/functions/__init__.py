@@ -5,7 +5,6 @@ from find_that_charity_spark.functions.analyzer import (  # noqa: F401
     analyze_series,
     tokenize_expr,
     tokenize_udf,
-    tokenize_name_udf,
 )
 from find_that_charity_spark.functions.bm25 import (  # noqa: F401
     B,

@@ -15,9 +15,11 @@ BASELINE.json input_hint ("byte-identical extracted text per url"):
 
 - the *pinned scalar* functions ``analyze`` / ``analyze_name`` — the
   reference definition, used by the in-repo brute-force oracle;
-- the *vectorized* pandas twins ``analyze_series`` / ``analyze_name_series``
-  wrapped as Arrow-batched ``pandas_udf``s — the production path (no
-  per-row Python UDFs anywhere, BASELINE.json input_hint).
+- the *vectorized* pandas forms ``analyze_series`` / ``analyze_name_series``;
+  ``analyze_series`` is wrapped as the Arrow-batched ``tokenize_udf``, the
+  build's tokenizer (no per-row Python UDFs anywhere, BASELINE.json
+  input_hint). Queries are parsed with the scalar functions
+  (``operators.query.parse_query``).
 
 ``tokenize_expr`` is a third, JVM-native form (``regexp_extract_all``)
 valid only for ASCII-lowercase-safe text; it exists so DuckDB oracle SQL and
@@ -85,12 +87,6 @@ def analyze_name_series(s: pd.Series) -> pd.Series:
 def tokenize_udf(s: pd.Series) -> pd.Series:
     """Arrow-batched production tokenizer (SURVEY.md §2C C5)."""
     return analyze_series(s)
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_name_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched recon-mode tokenizer (SURVEY.md §2D D1)."""
-    return analyze_name_series(s)
 
 
 def tokenize_expr(col: Column | str) -> Column:

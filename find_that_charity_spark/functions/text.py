@@ -43,13 +43,6 @@ def punct_count_sql(text_col: str = "text") -> str:
     return f"(length({text_col}) - length(regexp_replace({text_col}, '{PUNCT_CLASS}', '', 'g')))"
 
 
-def stopword_count(lang: str, text_col: str = "text") -> Column:
-    words = STOPWORDS[lang]
-    return F.size(
-        F.filter(tokenize_expr(text_col), lambda t: t.isin(*words))
-    )
-
-
 def stopword_count_sql(lang: str, text_col: str = "text") -> str:
     in_list = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
     return (

@@ -2,10 +2,13 @@
 
 Batch top-k retrieval over the segment index:
 
-    queries -> analyze (D1, mode-aware Arrow UDF) -> explode terms
-      -> broadcast-join dictionary (D2)
+    queries -> parse_query (D1, one pure-Python parser for every route)
+      -> dictionary lookup (D2: driver probe, or a broadcast join for
+         batches over 10,000 queries, parsed under applyInPandas)
       -> partition-pruned segment fetch, bucket IN-list (D3, no shuffle)
-      -> groupBy(qid) applyInPandas: decode + Block-Max WAND + BM25 (D4)
+      -> decode + Block-Max WAND + BM25 (D4): in the driver when the
+         batch's postings fit ``_driver_score_max_postings()``, else in
+         executor Python workers
       -> deterministic top-k order (D5, B4) -> optional url join-back (D6)
 
 Block-Max WAND here is a *window-sweep* variant, chosen so the Python side
@@ -43,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from find_that_charity_spark.functions.analyzer import tokenize_name_udf, tokenize_udf
+from find_that_charity_spark.functions import analyzer
 from find_that_charity_spark.functions.bm25 import idf_np
 from find_that_charity_spark.plans.checkpoint import check_format
 from find_that_charity_spark.functions.codec import decode_block
@@ -497,8 +500,7 @@ def make_query_scorer(
             # per-term boost (Lucene 'term^2.5'): scales the cursor weight,
             # which scales scores AND block upper bounds consistently — BMW
             # pruning stays exact (ub = weight * tfnorm(max_tf, min_dl))
-            if "boost" in grp.columns:
-                idf *= float(grp["boost"].iloc[0])
+            idf *= float(grp["boost"].iloc[0])
             return [
                 _make_cursor(idf, row["postings"], row["blockmax"], avgdl)
                 for _, row in grp.sort_values("min_doc").iterrows()
@@ -724,14 +726,17 @@ def load_stats(spark: SparkSession, index_dir: str) -> tuple[int, float]:
 class IndexSearcher:
     """Warm-index, low-latency search handle (the interactive regime).
 
-    ``run_queries`` is the throughput path: it re-reads dictionary/stats
-    and runs analyzer UDF + broadcast-join jobs per batch — right for big
-    batches, wasteful for one query. This handle caches corpus stats on
-    the driver and pins the dictionary in executor memory once, then
-    serves each query with two jobs: an in-memory dictionary probe and
-    the pruned-scan scoring job. p50/p99 latency in BENCH uses this,
-    matching the BASELINE.md 'warm index' protocol (and Elasticsearch,
-    which the reference queries, is likewise a warm long-lived service).
+    Pins what a long-lived service keeps warm: corpus stats, the term map
+    (when the dictionary has at most ``preload_terms`` terms; a bigger one
+    is looked up through ``probe_dictionary``), the tombstones and the
+    segments reader. Each query then runs the batch routes' own code:
+    ``parse_query``, then ``_score_driver`` over the pinned reader while
+    its postings fit ``_driver_score_max_postings()``, else the one-query
+    distributed plan — one Spark job either way when warm. Reopen the
+    handle after appends, compaction or vacuum. p50/p99 latency in BENCH
+    uses this, matching the BASELINE.md 'warm index' protocol (and
+    Elasticsearch, which the reference queries, is likewise a warm
+    long-lived service).
     """
 
     def __init__(
@@ -740,21 +745,16 @@ class IndexSearcher:
         self.spark = spark
         self.index_dir = index_dir
         self.n_docs, self.avgdl = load_stats(spark, index_dir)
-        self.dictionary = (
-            spark.read.parquet(f"{index_dir}/dictionary")
-            .select("term", "bucket", "df")
-            .persist()
-        )
-        n_terms = self.dictionary.count()  # materialize the cache
         # ES keeps the terms dictionary in node heap; the analog here is a
-        # driver-side term map when it fits (~100 B/term), turning the
-        # per-query dictionary probe job into a dict lookup — one Spark
-        # job per query instead of two. Web-scale dictionaries (10^8-10^9
-        # terms) exceed the bound and keep the executor-cached probe.
+        # driver-side term map when it fits (~100 B/term), in
+        # probe_dictionary's (df, bucket) order. Web-scale dictionaries
+        # (10^8-10^9 terms) exceed the bound and are probed per query.
         self._term_map: dict[str, tuple[int, int]] | None = None
-        if n_terms <= preload_terms:
+        dictionary = spark.read.parquet(f"{index_dir}/dictionary")
+        if dictionary.count() <= preload_terms:
             self._term_map = {
-                r["term"]: (r["bucket"], r["df"]) for r in self.dictionary.collect()
+                r["term"]: (int(r["df"]), int(r["bucket"]))
+                for r in dictionary.select("term", "df", "bucket").collect()
             }
         # lazy fuzzy-expansion state (built on first fuzzy query):
         # _alphabet = every char that appears in a pinned dictionary term;
@@ -762,170 +762,34 @@ class IndexSearcher:
         self._alphabet: str | None = None
         self._del_index: dict[str, list[str]] | None = None
         self.segments = spark.read.parquet(f"{index_dir}/segments")
-        # tombstones pinned once for the handle's lifetime (warm regime);
-        # reopen the searcher after appends/vacuum, as with stats/dictionary
-        tomb = read_tombstones(spark, index_dir)
-        self._tomb_bc = spark.sparkContext.broadcast(tomb) if tomb.size else None
+        self._tomb = read_tombstones(spark, index_dir)
 
     def search(self, text: str, k: int = 10, mode: str = "freetext") -> list:
-        """One query -> [(rank, doc_id, score)] — two Spark jobs, warm."""
-        from find_that_charity_spark.functions.analyzer import analyze, analyze_name
-
-        qa = analyze_name if mode == "recon" else analyze
-        pos: set[str] = set()
-        neg: set[str] = set()
-        offsets: dict[str, list[int]] = {}
-        boosts: dict[str, float] = {}
-        if mode == "phrase":
-            toks = analyze(text or "")
-            for i, t in enumerate(toks):
-                offsets.setdefault(t, []).append(i)
-            pos = set(toks)
-        elif mode == "fuzzy":
-            pos = self._expand_fuzzy(sorted(set(analyze_name(text or ""))))
-            if not pos:
-                return []
-        else:
-            for word in (text or "").split():
-                m = re.match(r"^(.*)\^(\d+(?:\.\d+)?)$", word)
-                b = float(m.group(2)) if m else 1.0
-                wtext = m.group(1) if m else word
-                toks = qa(wtext.lstrip("-"))
-                (neg if word.startswith("-") else pos).update(toks)
-                for t in toks:
-                    boosts[t] = max(boosts.get(t, 1.0), b)
-        all_terms = sorted(pos | neg)
-        if not pos:
-            return []
+        """One query -> [(rank, doc_id, score)] — one Spark job, warm."""
+        terms, n_required = parse_query(text, mode)
+        if mode == "fuzzy":
+            terms = dict.fromkeys(self._expand_fuzzy(sorted(terms)), (False, None, 1.0))
+            n_required = None
         if self._term_map is not None:
-            by_term = {t: self._term_map[t] for t in all_terms if t in self._term_map}
+            by_term = {t: self._term_map[t] for t in terms if t in self._term_map}
         else:
-            matched = self.dictionary.where(F.col("term").isin(all_terms)).collect()
-            by_term = {r["term"]: (r["bucket"], r["df"]) for r in matched}
-        if not any(t in by_term for t in pos):
-            return []
-        buckets = sorted({b for b, _ in by_term.values()})
-        hit_terms = [t for t in all_terms if t in by_term]
-        # Driver-side scoring tail (optimization round 6 batch 2): the
-        # pinned dictionary gives the exact postings volume up front, so a
-        # bounded query pulls its pruned segment rows from the
-        # executor-cached segments relation in ONE collect job and scores
-        # in-process with the same numpy scorer — no Python-worker round
-        # trip at all. Over-bound (stop-word) queries keep the
-        # mapInPandas path below.
-        total_postings = sum(by_term[t][1] for t in hit_terms)
-        if total_postings <= _driver_score_max_postings():
-            seg_rows = (
-                self.segments.where(F.col("bucket").isin(buckets))
-                .where(F.col("term").isin(hit_terms))
-                .select(
-                    "term", "min_doc", "max_doc", "has_positions",
-                    "postings", "blockmax",
-                )
-                .collect()
-            )
-            recs = []
-            for sr in seg_rows:
-                t = sr["term"]
-                recs.append(
-                    (
-                        "q", int(k), mode, t in neg,
-                        float(boosts.get(t, 1.0)),
-                        offsets.get(t) or None, len(pos), t,
-                        int(by_term[t][1]), sr["min_doc"], sr["max_doc"],
-                        sr["has_positions"], sr["postings"], sr["blockmax"],
-                    )
-                )
-            if not recs:
-                return []
-            scorer = make_query_scorer(
-                self.n_docs, self.avgdl, use_bmw=True,
-                tombstones=self._tomb_bc,
-            )
-            out_pdf = scorer(
-                pd.DataFrame(
-                    recs,
-                    columns=[
-                        "qid", "k", "mode", "neg", "boost", "q_offsets",
-                        "n_required", "term", "df", "min_doc", "max_doc",
-                        "has_positions", "postings", "blockmax",
-                    ],
-                )
+            by_term = probe_dictionary(self.spark, self.index_dir, sorted(terms))
+        rows = _matched_rows([("q", int(k), mode, terms, n_required)], by_term)
+        if all(r[3] for r in rows):
+            return []  # no positive term in the dictionary
+        if _fits_driver_budget(rows):
+            res = _score_driver(
+                self.spark, self.index_dir, rows, self.n_docs, self.avgdl, True,
+                self._tomb, None, False, segments=self.segments,
             )
             return [
                 (int(r.rank), int(r.doc_id), float(r.score))
-                for r in out_pdf.itertuples(index=False)
+                for r in res.itertuples(index=False)
             ]
-        # ONE Spark job warm: every per-query constant (df, neg flag,
-        # q_offsets) is attached as a literal map expression instead of a
-        # broadcast-joined query DataFrame (that join costs a broadcast
-        # job), and the single-qid grouping is a narrow coalesce(1) +
-        # mapInPandas instead of a groupBy exchange (AQE splits that into
-        # two more jobs). Single-query latency path only — batched
-        # throughput stays on run_queries' distributed groupBy.
-        df_map = F.create_map(
-            *[x for t in hit_terms for x in (F.lit(t), F.lit(int(by_term[t][1])))]
+        plan = _one_query_plan(
+            self.segments, rows, self.n_docs, self.avgdl, True, self._tomb, None
         )
-        neg_hits = [t for t in hit_terms if t in neg]
-        neg_col = (
-            F.col("term").isin(neg_hits) if neg_hits else F.lit(False)
-        )
-        if any(offsets.get(t) for t in hit_terms):
-            off_map = F.create_map(
-                *[
-                    x
-                    for t in hit_terms
-                    if offsets.get(t)
-                    for x in (
-                        F.lit(t),
-                        F.array(*[F.lit(int(o)) for o in offsets[t]]),
-                    )
-                ]
-            )
-            off_col = off_map[F.col("term")]
-        else:
-            off_col = F.lit(None).cast("array<int>")
-        boosted = [t for t in hit_terms if boosts.get(t, 1.0) != 1.0]
-        if boosted:
-            boost_map = F.create_map(
-                *[
-                    x
-                    for t in hit_terms
-                    for x in (F.lit(t), F.lit(float(boosts.get(t, 1.0))))
-                ]
-            )
-            boost_col = boost_map[F.col("term")]
-        else:
-            boost_col = F.lit(1.0)
-        rows = (
-            self.segments.where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(hit_terms))
-            .select(
-                F.lit("q").alias("qid"),
-                F.lit(int(k)).alias("k"),
-                F.lit(mode).alias("mode"),
-                neg_col.alias("neg"),
-                boost_col.alias("boost"),
-                off_col.alias("q_offsets"),
-                F.lit(len(pos)).alias("n_required"),
-                "term",
-                df_map[F.col("term")].alias("df"),
-                "min_doc", "max_doc", "has_positions", "postings", "blockmax",
-            )
-        )
-        scorer = make_query_scorer(
-            self.n_docs, self.avgdl, use_bmw=True, tombstones=self._tomb_bc
-        )
-
-        def one_group(it):
-            import pandas as pd  # noqa: PLC0415 — worker-side import
-
-            batches = [pdf for pdf in it if len(pdf)]
-            if batches:
-                yield scorer(pd.concat(batches, ignore_index=True))
-
-        out = rows.coalesce(1).mapInPandas(one_group, RESULTS_SCHEMA).collect()
-        return [(r["rank"], r["doc_id"], r["score"]) for r in sorted(out, key=lambda r: r["rank"])]
+        return sorted((r["rank"], r["doc_id"], r["score"]) for r in plan.collect())
 
     # generation beats the deletion-key dual only while terms*alphabet is
     # small: generation probes O(len*|alphabet|) strings per query term,
@@ -950,82 +814,140 @@ class IndexSearcher:
         O(len) probes per term instead of O(len*|alphabet|) — still zero
         Spark jobs (VERDICT r04 item 6).
 
-        Falls back to the fuzzy_keys deletion index (pushed IN-list scan,
-        one extra job) for web-scale dictionaries that exceed the pin."""
+        Web-scale dictionaries that exceed the pin probe the fuzzy_keys
+        deletion index like a batch does (``_fuzzy_candidates``, one
+        extra job)."""
         from find_that_charity_spark.functions.fuzzy import deletion_keys, within_edit1
 
-        if self._term_map is not None:
-            if self._alphabet is None:
-                self._alphabet = "".join(
-                    sorted({ch for t in self._term_map for ch in t})
-                )
-            if (
-                len(qterms) >= self._FUZZY_DUAL_MIN_TERMS
-                or len(self._alphabet) > self._FUZZY_DUAL_MAX_ALPHABET
-            ):
-                if self._del_index is None:
-                    idx: dict[str, list[str]] = {}
-                    for u in self._term_map:
-                        for key in deletion_keys(u):
-                            idx.setdefault(key, []).append(u)
-                    self._del_index = idx
-                out = set()
-                for t in qterms:
-                    cands: set[str] = set()
-                    for key in deletion_keys(t):
-                        cands.update(self._del_index.get(key, ()))
-                    out.update(c for c in cands if within_edit1(c, t))
-                return out
-            alphabet = self._alphabet
+        if self._term_map is None:
+            return {
+                c for c in _fuzzy_candidates(self.spark, self.index_dir, qterms)
+                if any(within_edit1(c, t) for t in qterms)
+            }
+        if self._alphabet is None:
+            self._alphabet = "".join(sorted({ch for t in self._term_map for ch in t}))
+        if (
+            len(qterms) >= self._FUZZY_DUAL_MIN_TERMS
+            or len(self._alphabet) > self._FUZZY_DUAL_MAX_ALPHABET
+        ):
+            if self._del_index is None:
+                idx: dict[str, list[str]] = {}
+                for u in self._term_map:
+                    for key in deletion_keys(u):
+                        idx.setdefault(key, []).append(u)
+                self._del_index = idx
             out = set()
             for t in qterms:
-                if t in self._term_map:
-                    out.add(t)
-                for i in range(len(t)):  # deletions
-                    c = t[:i] + t[i + 1 :]
-                    if c and c in self._term_map:
-                        out.add(c)
-                for i in range(len(t)):  # substitutions
-                    for ch in alphabet:
-                        c = t[:i] + ch + t[i + 1 :]
-                        if c in self._term_map:
-                            out.add(c)
-                for i in range(len(t) + 1):  # insertions
-                    for ch in alphabet:
-                        c = t[:i] + ch + t[i:]
-                        if c in self._term_map:
-                            out.add(c)
+                cands: set[str] = set()
+                for key in deletion_keys(t):
+                    cands.update(self._del_index.get(key, ()))
+                out.update(c for c in cands if within_edit1(c, t))
             return out
-        keys = sorted({key for t in qterms for key in deletion_keys(t)})
-        try:
-            cand = (
-                cached_parquet(self.spark, f"{self.index_dir}/fuzzy_keys")
-                .where(F.col("key").isin(keys))
-                .select("term")
-                .distinct()
-                .collect()
-            )
-        except AnalysisException:  # pre-fuzzy_keys index: no such table
-            from functools import reduce
-
-            conds = [
-                (F.abs(F.length("term") - len(t)) <= 1)
-                & (F.levenshtein(F.col("term"), F.lit(t)) <= 1)
-                for t in qterms
-            ]
-            cand = self.dictionary.where(reduce(lambda a, b: a | b, conds)).select(
-                "term"
-            ).collect()
-        return {
-            r["term"] for r in cand if any(within_edit1(r["term"], t) for t in qterms)
-        }
+        alphabet = self._alphabet
+        out = set()
+        for t in qterms:
+            if t in self._term_map:
+                out.add(t)
+            for i in range(len(t)):  # deletions
+                c = t[:i] + t[i + 1 :]
+                if c and c in self._term_map:
+                    out.add(c)
+            for i in range(len(t)):  # substitutions
+                for ch in alphabet:
+                    c = t[:i] + ch + t[i + 1 :]
+                    if c in self._term_map:
+                        out.add(c)
+            for i in range(len(t) + 1):  # insertions
+                for ch in alphabet:
+                    c = t[:i] + ch + t[i:]
+                    if c in self._term_map:
+                        out.add(c)
+        return out
 
     def close(self) -> None:
-        self.dictionary.unpersist()
+        """Drop the driver-side term map and fuzzy index. A closed handle
+        still answers, looking terms up through ``probe_dictionary``."""
+        self._term_map = None
+        self._alphabet = self._del_index = None
 
 
-# matched-terms relation schema (shared by the distributed lineage and the
-# driver-side small-batch analyzer)
+# Lucene boost suffix 'word^2.5'; an invalid suffix ('a^b') does not match
+# and the word is analyzed as written
+_BOOST_RE = re.compile(r"^(.*)\^(\d+(?:\.\d+)?)$")
+
+
+def parse_query(
+    text: str | None, mode: str
+) -> tuple[dict[str, tuple[bool, "list[int] | None", float]], int]:
+    """The query language (D1, D7). Every route parses with this function:
+    ``IndexSearcher.search``, the driver parse of a small batch, and the
+    applyInPandas parse of a batch over 10,000 queries.
+
+    Returns ``({term: (neg, q_offsets, boost)}, n_required)``:
+
+    - ``phrase``: the analyzed tokens in order; ``q_offsets`` lists each
+      term's positions (ES match_phrase); ``-`` and ``^`` are not operators.
+    - ``fuzzy``: the recon-analyzed query terms, before their edit-1
+      expansion against the dictionary.
+    - every other mode: whitespace-separated words. ``-word`` negates the
+      word's terms (ES bool must_not) and ``word^2.5`` boosts them (Lucene
+      term boost); ``recon`` folds accents (``analyze_name``). A term both
+      included and negated is negated; a repeated term takes its largest
+      boost.
+
+    ``n_required`` counts the distinct terms of non-negated words, the
+    oracle's rule (``oracle.brute_force_topk``): ``bool_and`` requires each
+    of them and then drops documents holding a negated term, so a term
+    both required and negated leaves no hits."""
+    text = text or ""
+    if mode == "phrase":
+        offsets: dict[str, list[int]] = {}
+        for i, t in enumerate(analyzer.analyze(text)):
+            offsets.setdefault(t, []).append(i)
+        return {t: (False, offs, 1.0) for t, offs in offsets.items()}, len(offsets)
+    if mode == "fuzzy":
+        qterms = set(analyzer.analyze_name(text))
+        return {t: (False, None, 1.0) for t in qterms}, len(qterms)
+    qa = analyzer.analyze_name if mode == "recon" else analyzer.analyze
+    terms: dict[str, tuple[bool, None, float]] = {}
+    required: set[str] = set()
+    for word in text.split():
+        neg = word.startswith("-")
+        m = _BOOST_RE.match(word)
+        boost = float(m.group(2)) if m else 1.0
+        for t in qa((m.group(1) if m else word).lstrip("-")):
+            was_neg, _, was_boost = terms.get(t, (False, None, 1.0))
+            terms[t] = (was_neg or neg, None, max(was_boost, boost))
+            if not neg:
+                required.add(t)
+    return terms, len(required)
+
+
+def _parse_batch(qrows) -> list[tuple]:
+    """Parse (qid, text, k, mode) rows: [(qid, k, mode, terms, n_required)]
+    in first-seen qid order. Rows sharing a qid are one query (malformed
+    input, but every route must agree): the first row's k and mode, the
+    rows' words pooled (phrase: offsets union-sorted)."""
+    by_qid: dict[str, tuple[int, str, list[str]]] = {}
+    for r in qrows:
+        by_qid.setdefault(r["qid"], (int(r["k"]), r["mode"], []))[2].append(r["text"] or "")
+    out = []
+    for qid, (k, mode, texts) in by_qid.items():
+        if mode != "phrase" or len(texts) == 1:
+            terms, n_required = parse_query(" ".join(texts), mode)
+        else:
+            offsets: dict[str, list[int]] = {}
+            for text in texts:
+                for t, (_, offs, _) in parse_query(text, mode)[0].items():
+                    offsets.setdefault(t, []).extend(offs)
+            terms = {t: (False, sorted(offs), 1.0) for t, offs in offsets.items()}
+            n_required = len(terms)
+        out.append((qid, k, mode, terms, n_required))
+    return out
+
+
+# matched-terms relation: one row per (qid, dictionary term), the input of
+# both scoring tails
 _MATCHED_SCHEMA = (
     "qid string, k int, mode string, neg boolean, boost double, "
     "q_offsets array<int>, "
@@ -1033,136 +955,71 @@ _MATCHED_SCHEMA = (
 )
 
 
-def _analyze_batch_driver(
-    spark: SparkSession,
-    index_dir: str,
-    dictionary: DataFrame,
-    qrows: list,
-) -> list[tuple]:
-    """Driver-side twin of the distributed query-analysis lineage for
-    SMALL batches (VERDICT r03 item 8): the tokenize-UDF + explode +
-    groupBy + dictionary-join dataflow costs a dozen AQE stage-jobs per
-    batch, which dominates small-batch latency. Here the analysis is
-    plain Python (the same pinned analyzers) and the dictionary lookup is
-    ONE pushed IN-list probe job (+ one fuzzy_keys probe when the batch
-    has fuzzy queries). Semantics are identical: same neg-wins rule, same
-    n_required accounting, same fuzzy edit-1 expansion contract; the
-    batched path equality is pinned by tests/test_index_query.py and the
-    driver gates."""
-    from find_that_charity_spark.functions.analyzer import analyze, analyze_name
-    from find_that_charity_spark.functions.fuzzy import deletion_keys, within_edit1
+def _matched_rows(parsed: list[tuple], by_term: dict) -> list[tuple]:
+    """``_MATCHED_SCHEMA`` tuples of parsed queries, one per (qid, term)
+    whose term is in ``by_term`` ({term: (df, bucket)})."""
+    return [
+        (qid, k, mode, neg, boost, offs, t, *by_term[t], n_required)
+        for qid, k, mode, terms, n_required in parsed
+        for t, (neg, offs, boost) in sorted(terms.items())
+        if t in by_term
+    ]
 
-    # keyed by qid: duplicate qid rows MERGE exactly as the distributed
-    # groupBy(qid, term) lineage does — first k/mode, neg ORs, phrase
-    # offsets union-sorted (malformed input, but the two paths must agree)
-    by_qid: dict[str, list] = {}  # qid -> [k, mode, {term: [neg, offsets]}]
-    fuzzy_by_qid: dict[str, tuple[int, set[str]]] = {}
-    for r in qrows:
-        qid, text = r["qid"], r["text"] or ""
-        k, mode = int(r["k"]), r["mode"]
-        if mode == "fuzzy":
-            prev_f = fuzzy_by_qid.get(qid)
-            qts = set(analyze_name(text))
-            if prev_f is None:
-                fuzzy_by_qid[qid] = (k, qts)
-            else:
-                fuzzy_by_qid[qid] = (prev_f[0], prev_f[1] | qts)
-            continue
-        entry = by_qid.setdefault(qid, [k, mode, {}])
-        terms: dict[str, list] = entry[2]
-        if mode == "phrase":
-            toks = analyze(text)
-            for i, t in enumerate(toks):
-                slot = terms.setdefault(t, [False, [], 1.0])
-                slot[1].append(i)
-        else:
-            qa = analyze_name if mode == "recon" else analyze
-            for word in text.split():
-                if not word:
-                    continue
-                neg = word.startswith("-")
-                # Lucene boost 'word^2.5' — strip before analysis; an
-                # invalid suffix doesn't match and tokenizes as-is
-                # (identical to the distributed regexp twin)
-                m = re.match(r"^(.*)\^(\d+(?:\.\d+)?)$", word)
-                boost = float(m.group(2)) if m else 1.0
-                wtext = m.group(1) if m else word
-                for t in qa(wtext.lstrip("-")):
-                    slot = terms.setdefault(t, [False, None, 1.0])
-                    # a term both included and negated -> negated (max(neg))
-                    slot[0] = slot[0] or neg
-                    slot[2] = max(slot[2], boost)  # repeated term -> max
-    parsed = []  # (qid, k, mode, {term: (neg, q_offsets, boost)}, n_required)
-    for qid, (k, mode, terms) in by_qid.items():
-        final = {
-            t: (bool(neg), sorted(offs) if offs is not None else None, float(boost))
-            for t, (neg, offs, boost) in terms.items()
-        }
-        n_required = sum(1 for neg, _, _ in final.values() if not neg)
-        parsed.append((qid, k, mode, final, n_required))
-    fuzzy_qs = [(qid, k, sorted(qts)) for qid, (k, qts) in fuzzy_by_qid.items()]
 
-    # fuzzy expansion: deletion-key probe (pushed IN-list) + exact verify,
-    # exactly the distributed path's contract; falls back to a levenshtein
-    # filter over the dictionary for indexes without fuzzy_keys
-    fuzzy_expanded: list[tuple[str, int, str]] = []  # (qid, k, term)
-    if fuzzy_qs:
-        all_keys = sorted(
-            {key for _, _, qts in fuzzy_qs for t in qts for key in deletion_keys(t)}
+def _fuzzy_candidates(spark: SparkSession, index_dir: str, qterms: list[str]) -> list[str]:
+    """Dictionary terms that may lie within edit distance 1 of a query
+    term: one pushed IN-list probe of the build-time deletion-key index
+    (``fuzzy_keys``), or, on an index built before it existed, a
+    levenshtein filter over the dictionary. Callers verify each candidate
+    with ``within_edit1``."""
+    from find_that_charity_spark.functions.fuzzy import deletion_keys
+
+    if not qterms:
+        return []
+    try:
+        cand = cached_parquet(spark, f"{index_dir}/fuzzy_keys").where(
+            in_list("key", sorted({key for t in qterms for key in deletion_keys(t)}))
         )
-        try:
-            cand = [
-                r["term"]
-                for r in cached_parquet(spark, f"{index_dir}/fuzzy_keys")
-                .where(F.col("key").isin(all_keys))
-                .select("term")
-                .distinct()
-                .collect()
-            ]
-        except AnalysisException:  # pre-fuzzy_keys index: no such table
-            all_q = sorted({t for _, _, qts in fuzzy_qs for t in qts})
-            from functools import reduce
+    except AnalysisException:  # pre-fuzzy_keys index: no such table
+        from functools import reduce
 
-            conds = [
-                (F.abs(F.length("term") - len(t)) <= 1)
-                & (F.levenshtein(F.col("term"), F.lit(t)) <= 1)
-                for t in all_q
-            ]
-            cand = [
-                r["term"]
-                for r in dictionary.where(reduce(lambda a, b: a | b, conds))
-                .select("term")
-                .distinct()
-                .collect()
-            ]
-        for qid, k, qts in fuzzy_qs:
-            seen = set()
-            for term in cand:
-                if term not in seen and any(within_edit1(term, t) for t in qts):
-                    seen.add(term)
-                    fuzzy_expanded.append((qid, k, term))
+        conds = [
+            (F.abs(F.length("term") - len(t)) <= 1)
+            & (F.levenshtein(F.col("term"), F.lit(t)) <= 1)
+            for t in qterms
+        ]
+        cand = cached_parquet(spark, f"{index_dir}/dictionary").where(
+            reduce(lambda a, b: a | b, conds)
+        )
+    return [r["term"] for r in cand.select("term").distinct().collect()]
 
-    probe_terms = sorted(
-        {t for _, _, _, terms, _ in parsed for t in terms}
-        | {t for _, _, t in fuzzy_expanded}
-    )
+
+def _analyze_batch_driver(
+    spark: SparkSession, index_dir: str, qrows: list
+) -> list[tuple]:
+    """Small-batch analysis on the driver (VERDICT r03 item 8): the
+    batch's ``_MATCHED_SCHEMA`` rows from ``_parse_batch``, one
+    ``_fuzzy_candidates`` probe for the batch's fuzzy queries, and one
+    ``probe_dictionary`` call, which runs a job only for terms the driver
+    has not resolved before."""
+    from find_that_charity_spark.functions.fuzzy import within_edit1
+
+    parsed = _parse_batch(qrows)
+    fuzzy_terms = sorted({t for p in parsed if p[2] == "fuzzy" for t in p[3]})
+    if fuzzy_terms:
+        cand = _fuzzy_candidates(spark, index_dir, fuzzy_terms)
+        parsed = [
+            p if p[2] != "fuzzy" else (
+                *p[:3],
+                {c: (False, None, 1.0) for c in cand if any(within_edit1(c, t) for t in p[3])},
+                None,
+            )
+            for p in parsed
+        ]
+    probe_terms = sorted({t for p in parsed for t in p[3]})
     if not probe_terms:
         return []
-    by_term = probe_dictionary(spark, index_dir, probe_terms)
-    rows: list[tuple] = []
-    for qid, k, mode, terms, n_required in parsed:
-        for t in sorted(terms):
-            if t in by_term:
-                neg, offs, boost = terms[t]
-                df, bucket = by_term[t]
-                rows.append(
-                    (qid, k, mode, neg, boost, offs, t, df, bucket, n_required)
-                )
-    for qid, k, t in fuzzy_expanded:
-        if t in by_term:
-            df, bucket = by_term[t]
-            rows.append((qid, k, "fuzzy", False, 1.0, None, t, df, bucket, None))
-    return rows
+    return _matched_rows(parsed, probe_dictionary(spark, index_dir, probe_terms))
 
 
 _TAKE_WIDE_LOCK = threading.Lock()
@@ -1252,24 +1109,25 @@ def _score_driver(
     include_arr: "np.ndarray | None",
     join_urls: bool,
     exclude_by_qid: "dict[str, np.ndarray] | None" = None,
+    segments: DataFrame | None = None,
 ) -> pd.DataFrame:
-    """Driver-side twin of :func:`_score_matched` for small batches with
-    bounded postings volume (see run_queries): ONE pushed IN-list segments
-    job fetches the query terms' posting rows, the same
-    ``make_query_scorer`` kernel scores them in-process, and the url
-    join-back becomes ONE pushed IN-list docs probe over the union of the
-    result ids. Returns the pandas frame (qid, rank, doc_id[, url], score)
-    ordered by (qid, rank) — no Spark relation is built.
+    """The driver scoring tail, for batches with bounded postings volume
+    (``_fits_driver_budget``): ONE pushed IN-list segments job fetches the
+    query terms' posting rows, the same ``make_query_scorer`` kernel the
+    distributed tail (:func:`_score_matched`) ships to executors scores
+    them in-process, and the url join-back becomes ONE pushed IN-list docs
+    probe over the union of the result ids. Returns the pandas frame
+    (qid, rank, doc_id[, url], score) ordered by (qid, rank) — no Spark
+    relation is built.
 
     ``exclude_by_qid``: per-qid doc ids barred on top of ``tomb`` (one
     reconcile signature's property filter), so queries with different
     filter contexts share one fetch and one url probe. Qids sharing the
     same array object share one exclusion union.
 
-    Semantics are identical by construction — same scorer, same per-qid
-    grouping, same inner-join url attach — and the batched-path equality
-    is pinned by tests."""
-    segs = cached_parquet(spark, f"{index_dir}/segments")
+    ``segments``: a pinned segments reader (``IndexSearcher``'s); by
+    default the mtime-checked ``cached_parquet`` one."""
+    segs = segments if segments is not None else cached_parquet(spark, f"{index_dir}/segments")
     buckets = sorted({r[8] for r in matched_rows})
     terms = sorted({r[6] for r in matched_rows})
     seg_rows = (
@@ -1396,152 +1254,101 @@ def run_queries(
         if include_doc_ids is not None
         else None
     )
-    dictionary = cached_parquet(spark, f"{index_dir}/dictionary")
 
-    # SMALL batches take the driver-side analysis shortcut: plain-Python
-    # analyzers + ONE pushed IN-list dictionary probe replace the dozen
-    # AQE stage-jobs of the distributed tokenize/groupBy/join lineage
-    # (VERDICT r03 item 8 — measured 28 jobs -> 5 per batch). Batch size
-    # is probed with an early-terminating take(threshold + 1), cheap for
-    # any source; the rows are then already in hand for the small case.
-    # A caller that already holds the batch driver-side (add_to_csv's
-    # probe) passes ``prefetched_qrows`` and skips the probe job entirely
-    # (VERDICT r04 item 5 — the rows must mirror queries_df).
+    # SMALL batches are parsed on the driver: plain-Python parse + ONE
+    # pushed IN-list dictionary probe (VERDICT r03 item 8 — measured 28
+    # jobs -> 5 per batch against the Spark-expression lineage this
+    # replaced). Batch size is probed with an early-terminating
+    # take(threshold + 1), cheap for any source; the rows are then already
+    # in hand for the small case. A caller that already holds the batch
+    # driver-side (add_to_csv's probe) passes ``prefetched_qrows`` and
+    # skips the probe job entirely (VERDICT r04 item 5 — the rows must
+    # mirror queries_df).
     if prefetched_qrows is not None:
         if len(prefetched_qrows) > localize_threshold:
             raise ValueError("prefetched_qrows only supports small batches")
         qrows = prefetched_qrows
     else:
         qrows = take_wide(queries_df, localize_threshold + 1)
-    n_queries = len(qrows)
-    if n_queries <= localize_threshold:
-        matched_rows = _analyze_batch_driver(spark, index_dir, dictionary, qrows)
-        if not matched_rows:
-            return spark.createDataFrame([], RESULTS_SCHEMA)
+    if len(qrows) > localize_threshold:
+        matched = _analyze_batch_distributed(spark, index_dir, queries_df)
+    else:
+        matched = _analyze_batch_driver(spark, index_dir, qrows)
+        if not matched:
+            return spark.createDataFrame([], _results_schema(join_urls))
         # Driver-side scoring tail (optimization round 6 batch 2): the
         # dictionary probe already yields the EXACT postings volume of the
         # batch (sum of matched df), so when it is bounded the pruned
         # segment rows are pulled driver-side in ONE pushed IN-list job
         # and scored with the same numpy scorer the executor task would
-        # run — replacing the broadcast-build + mapInPandas + docs-join
-        # stage sequence (3 jobs + a Python-worker round trip, ~0.5 s
-        # constant at local[32]) with one job. This is the warm-searcher
-        # regime ES serves from a data node's heap; a hot-term batch that
-        # exceeds the bound (the 100-TB stop-word case) keeps the
-        # distributed scoring tail. Guard is parameterised, never a
-        # result cache: every call re-reads the store.
-        if (not doc_shards or doc_shards <= 1) and _fits_driver_budget(matched_rows):
+        # run. This is the warm-searcher regime ES serves from a data
+        # node's heap; a hot-term batch that exceeds the bound (the 100-TB
+        # stop-word case) keeps the distributed scoring tail. Guard is
+        # parameterised, never a result cache: every call re-reads the
+        # store.
+        if (not doc_shards or doc_shards <= 1) and _fits_driver_budget(matched):
             return spark.createDataFrame(
                 _score_driver(
-                    spark, index_dir, matched_rows, n_docs, avgdl, use_bmw,
+                    spark, index_dir, matched, n_docs, avgdl, use_bmw,
                     tomb, include_arr, join_urls,
                 ),
-                _URL_RESULTS_SCHEMA if join_urls else RESULTS_SCHEMA,
+                _results_schema(join_urls),
             )
-        matched_local = spark.createDataFrame(matched_rows, _MATCHED_SCHEMA)
-        # row layout follows _MATCHED_SCHEMA: bucket is the 9th field
-        buckets = sorted({r[8] for r in matched_rows})
-        return _score_matched(
-            spark, index_dir, F.broadcast(matched_local.drop("bucket")),
-            buckets, matched_local, n_docs, avgdl, use_bmw,
-            spark.sparkContext.broadcast(tomb) if tomb.size else None,
-            doc_shards, join_urls,
-            spark.sparkContext.broadcast(include_arr)
-            if include_arr is not None
-            else None,
-            single_qid=len({r[0] for r in matched_rows}) == 1,
-        )
-    # one broadcast per batch: the (small, vacuum-bounded) tombstone set
-    # ships once per executor, not once per scorer task closure
-    tomb_bc = spark.sparkContext.broadcast(tomb) if tomb.size else None
-    include_bc = (
-        spark.sparkContext.broadcast(include_arr)
-        if include_arr is not None
-        else None
+    return _score_matched(
+        spark, index_dir, matched, n_docs, avgdl, use_bmw, tomb, include_arr,
+        doc_shards, join_urls,
     )
 
-    # D1 + D7 parse: words prefixed '-' are exclusions (ES bool must_not);
-    # mode 'bool_and' makes every positive term required (conjunctive);
-    # mode 'phrase' keeps token ORDER as query offsets (ES match_phrase).
-    # mode 'fuzzy' is handled EXCLUSIVELY by the expansion path below — an
-    # in-vocab query term must contribute once (as its own edit-distance-0
-    # expansion), not once per path (double-counted BM25).
-    non_phrase = queries_df.where(~F.col("mode").isin("phrase", "fuzzy"))
-    words = non_phrase.select(
-        "qid",
-        F.col("k").cast("int").alias("k"),
-        "mode",
-        F.explode(F.split("text", r"\s+")).alias("word"),
-    ).where(F.col("word") != "")
-    words = words.select(
-        "qid",
-        "k",
-        "mode",
-        F.col("word").startswith("-").alias("neg"),
-        # Lucene boost syntax 'word^2.5': strip the suffix BEFORE analysis
-        # (the tokenizer would otherwise split the number off as a term);
-        # empty extract -> null -> default 1.0. Invalid suffixes ('a^b')
-        # don't match and tokenize as-is — identical to the driver twin.
-        F.coalesce(
-            F.nullif(
-                F.regexp_extract("word", r"\^(\d+(?:\.\d+)?)$", 1), F.lit("")
-            ).cast("double"),
-            F.lit(1.0),
-        ).alias("boost"),
-        F.regexp_replace(
-            F.regexp_replace("word", r"\^\d+(?:\.\d+)?$", ""), r"^-", ""
-        ).alias("wtext"),
-    )
-    analyzed = words.select(
-        "qid",
-        "k",
-        "mode",
-        "neg",
-        "boost",
-        F.when(F.col("mode") == "recon", tokenize_name_udf("wtext"))
-        .otherwise(tokenize_udf("wtext"))
-        .alias("terms"),
-    )
-    qterms = (
-        analyzed.select(
-            "qid", "k", "mode", "neg", "boost", F.explode("terms").alias("term")
-        )
-        .groupBy("qid", "term")
-        .agg(
-            F.first("k").alias("k"),
-            F.first("mode").alias("mode"),
-            F.max("neg").alias("neg"),  # a term both included and negated -> negated
-            F.max("boost").alias("boost"),  # repeated term -> max boost (pinned)
-        )
-        .withColumn("q_offsets", F.lit(None).cast("array<int>"))
-    )
-    phrase = queries_df.where(F.col("mode") == "phrase")
-    phrase_terms = (
-        phrase.select(
-            "qid",
-            F.col("k").cast("int").alias("k"),
-            "mode",
-            F.posexplode(tokenize_udf("text")).alias("q_off", "term"),
-        )
-        .groupBy("qid", "term")
-        .agg(
-            F.first("k").alias("k"),
-            F.first("mode").alias("mode"),
-            F.lit(False).alias("neg"),
-            F.sort_array(F.collect_list(F.col("q_off").cast("int"))).alias("q_offsets"),
-        )
-        .withColumn("boost", F.lit(1.0))  # boost syntax is term-level only
-    )
-    qterms = qterms.select(
-        "qid", "term", "k", "mode", "neg", "boost", "q_offsets"
-    ).unionByName(
-        phrase_terms.select("qid", "term", "k", "mode", "neg", "boost", "q_offsets")
+
+def _results_schema(join_urls: bool):
+    return _URL_RESULTS_SCHEMA if join_urls else RESULTS_SCHEMA
+
+
+# the applyInPandas parse's output: one row per (qid, parsed term); fuzzy
+# rows carry the query term, expanded by the fuzzy_keys join
+_PARSED_SCHEMA = (
+    "qid string, k int, mode string, neg boolean, boost double, "
+    "q_offsets array<int>, term string, n_required long"
+)
+
+
+def _parse_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas body of the large-batch parse: ``_parse_batch`` over
+    one group's (qid, text, k, mode) rows. Groups are a hash of qid, so
+    every row of a qid is in the same call."""
+    rows = [
+        (qid, k, mode, neg, boost, offs, t, n_required)
+        for qid, k, mode, terms, n_required in _parse_batch(pdf.to_dict("records"))
+        for t, (neg, offs, boost) in sorted(terms.items())
+    ]
+    return pd.DataFrame(
+        rows,
+        columns=["qid", "k", "mode", "neg", "boost", "q_offsets", "term", "n_required"],
     )
 
-    # D2: the query-term set is tiny — broadcast it against the dictionary
-    matched = dictionary.join(F.broadcast(qterms), "term").select(
+
+def _analyze_batch_distributed(
+    spark: SparkSession, index_dir: str, queries_df: DataFrame
+) -> DataFrame:
+    """``_MATCHED_SCHEMA`` relation of a batch over the driver's 10,000-
+    query bound: ``_parse_batch`` runs in executor Python workers
+    (queries are the parallelism axis), and the dictionary and
+    ``fuzzy_keys`` lookups stay distributed joins."""
+    from find_that_charity_spark.functions.fuzzy import deletion_keys_expr
+
+    dictionary = cached_parquet(spark, f"{index_dir}/dictionary")
+    n_groups = max(1, spark.sparkContext.defaultParallelism)
+    parsed = (
+        queries_df.select("qid", "text", "k", "mode")
+        .groupBy(F.pmod(F.hash("qid"), F.lit(n_groups)))
+        .applyInPandas(_parse_group, _PARSED_SCHEMA)
+    )
+    # D2: the query-term set is small next to the dictionary — broadcast it
+    matched = dictionary.join(
+        F.broadcast(parsed.where(F.col("mode") != "fuzzy")), "term"
+    ).select(
         "qid", "k", "mode", "neg", "boost", "q_offsets", "term",
-        F.col("df").alias("df_global"), "bucket",
+        F.col("df").alias("df_global"), "bucket", "n_required",
     )
 
     # mode 'fuzzy' (ES fuzziness=1 analog, typo-tolerant reconciliation):
@@ -1550,10 +1357,7 @@ def run_queries(
     # its own idf. The expansion is a deletion-neighborhood EQUI-join
     # (functions/fuzzy.py); the exact levenshtein check runs only on the
     # key-matched candidates — never a scan-wide levenshtein over the
-    # dictionary. (Small batches never reach here — the driver shortcut
-    # above pushes their key set into the fuzzy_keys scan as an IN-list.)
-    from find_that_charity_spark.functions.fuzzy import deletion_keys_expr
-
+    # dictionary.
     try:  # build-time deletion index (df-free: key -> term only)
         cand_terms = cached_parquet(spark, f"{index_dir}/fuzzy_keys").select(
             "key", "term"
@@ -1563,17 +1367,9 @@ def run_queries(
             "term",
             F.explode(deletion_keys_expr("term")).alias("key"),
         )
-    fq = (
-        queries_df.where(F.col("mode") == "fuzzy")
-        .select(
-            "qid",
-            F.col("k").cast("int").alias("k"),
-            F.explode(tokenize_name_udf("text")).alias("qterm"),
-        )
-        .dropDuplicates(["qid", "qterm"])
-    )
-    fuzzy_keys_df = fq.select(
-        "qid", "k", "qterm", F.explode(deletion_keys_expr("qterm")).alias("key")
+    fuzzy_keys_df = parsed.where(F.col("mode") == "fuzzy").select(
+        "qid", "k", F.col("term").alias("qterm"),
+        F.explode(deletion_keys_expr("term")).alias("key"),
     )
     # accepted expansions carry only (qid, k, term); fresh (df, bucket)
     # come from the LIVE dictionary below — fuzzy_keys stores no stats,
@@ -1598,64 +1394,62 @@ def run_queries(
         "term",
         F.col("df").alias("df_global"),
         "bucket",
+        F.lit(None).cast("long").alias("n_required"),
     )
-    matched = matched.unionByName(fuzzy_matched)
-    # conjunctive semantics: a required term absent from the dictionary
-    # means zero results for that query — track required-term counts so the
-    # scorer can detect the short-fall (the join above drops missing terms)
-    required = (
-        qterms.where(~F.col("neg"))
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("n_required"))
-    )
-    matched = matched.join(F.broadcast(required), "qid", "left")
-
-    # a huge query batch (|queries| x |terms| beyond driver comfort) keeps
-    # the matched set distributed — bucket pruning survives via a
-    # distinct-buckets collect (bounded by num_buckets), and the segments
-    # join falls back to a shuffle join. localCheckpoint (eager):
-    # materializes once (the buckets collect below + the scoring join both
-    # read it), truncates the analyze-UDF lineage, and is reclaimed by the
-    # ContextCleaner when the returned DataFrame is dropped — unlike
-    # persist(), which this long-lived function could never safely
-    # unpersist.
-    matched = matched.localCheckpoint()
-    buckets = sorted(
-        r["bucket"] for r in matched.select("bucket").distinct().collect()
-    )
-    if not buckets:
-        return spark.createDataFrame([], RESULTS_SCHEMA)
-    matched_side = matched.drop("bucket")
-
-    return _score_matched(
-        spark, index_dir, matched_side, buckets, matched,
-        n_docs, avgdl, use_bmw, tomb_bc, doc_shards, join_urls, include_bc,
-    )
+    return matched.unionByName(fuzzy_matched)
 
 
 def _score_matched(
     spark: SparkSession,
     index_dir: str,
-    matched_side: DataFrame,
-    buckets: list[int],
-    qk_src: DataFrame,
+    matched: "list[tuple] | DataFrame",
     n_docs: int,
     avgdl: float,
     use_bmw: bool,
-    tomb_bc,
+    tomb: np.ndarray,
+    include: "np.ndarray | None",
     doc_shards: int | None,
     join_urls: bool,
-    include_bc=None,
-    single_qid: bool = False,
 ) -> DataFrame:
-    """Scoring tail shared by the distributed and driver-side analysis
-    paths: pruned segment scan -> broadcast matched-term join -> per-qid
-    (or per-shard) scorer -> optional url join-back."""
+    """The distributed scoring tail, for batches over the driver budget or
+    the driver's query bound. ``matched`` holds ``_MATCHED_SCHEMA`` rows:
+    driver-side tuples (a small batch) or a relation (a large one).
+
+    One driver-side query (and no doc shards) takes ``_one_query_plan``,
+    the plan ``IndexSearcher`` uses over its budget. Otherwise the pruned
+    segment scan joins the matched terms and applyInPandas scores each
+    qid (or each (qid, doc shard)); then the optional url join-back."""
+    sharded = bool(doc_shards and doc_shards > 1)
+    segments = cached_parquet(spark, f"{index_dir}/segments")
+    if isinstance(matched, list):
+        if not sharded and len({r[0] for r in matched}) == 1:
+            return _with_urls(
+                spark, index_dir, join_urls,
+                _one_query_plan(segments, matched, n_docs, avgdl, use_bmw, tomb, include),
+            )
+        # row layout follows _MATCHED_SCHEMA: bucket is the 9th field
+        buckets = sorted({r[8] for r in matched})
+        matched = spark.createDataFrame(matched, _MATCHED_SCHEMA)
+        matched_side = F.broadcast(matched.drop("bucket"))
+    else:
+        # a huge query batch (|queries| x |terms| beyond driver comfort)
+        # keeps the matched set distributed — bucket pruning survives via
+        # a distinct-buckets collect (bounded by num_buckets), and the
+        # segments join falls back to a shuffle join. localCheckpoint
+        # (eager): materializes once (the buckets collect below + the
+        # scoring join both read it), truncates the parse lineage, and is
+        # reclaimed by the ContextCleaner when the returned DataFrame is
+        # dropped — unlike persist(), which this long-lived function could
+        # never safely unpersist.
+        matched = matched.localCheckpoint()
+        buckets = sorted(
+            r["bucket"] for r in matched.select("bucket").distinct().collect()
+        )
+        if not buckets:
+            return spark.createDataFrame([], _results_schema(join_urls))
+        matched_side = matched.drop("bucket")
     # D3: bucket IN-list reaches the parquet scan as a partition filter
-    segments = cached_parquet(spark, f"{index_dir}/segments").where(
-        F.col("bucket").isin(buckets)
-    )
-    rows = segments.join(
+    rows = segments.where(F.col("bucket").isin(buckets)).join(
         matched_side,
         "term",
     ).select(
@@ -1663,15 +1457,19 @@ def _score_matched(
         F.col("df_global").alias("df"), "min_doc", "max_doc",
         "has_positions", "postings", "blockmax",
     )
-
+    # one broadcast per batch: the (small, vacuum-bounded) tombstone set
+    # ships once per executor, not once per scorer task closure
+    sc = spark.sparkContext
     scorer = make_query_scorer(
-        n_docs, avgdl, use_bmw=use_bmw, tombstones=tomb_bc, include=include_bc
+        n_docs, avgdl, use_bmw=use_bmw,
+        tombstones=sc.broadcast(tomb) if tomb.size else None,
+        include=sc.broadcast(include) if include is not None else None,
     )
-    if doc_shards and doc_shards > 1:
+    if sharded:
         span = max(1, -(-(n_docs) // doc_shards))  # ceil
         # explode each segment row to the doc-range shards it overlaps;
         # block skip pointers keep per-shard decode proportional to overlap
-        sharded = rows.select(
+        sharded_rows = rows.select(
             "*",
             F.explode(
                 F.sequence(
@@ -1685,41 +1483,95 @@ def _score_matched(
                 "range_hi": (F.col("shard").cast("long") * span + span),
             }
         )
-        partial = sharded.groupBy("qid", "shard").applyInPandas(scorer, RESULTS_SCHEMA)
+        partial = sharded_rows.groupBy("qid", "shard").applyInPandas(scorer, RESULTS_SCHEMA)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-        qk = qk_src.select("qid", "k")
         results = (
             partial.join(
-                F.broadcast(qk.dropDuplicates(["qid"])), "qid"
+                F.broadcast(matched.select("qid", "k").dropDuplicates(["qid"])), "qid"
             )
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= F.col("k"))
             .select("qid", F.col("rank").cast("int").alias("rank"), "doc_id", "score")
         )
-    elif single_qid:
-        # one query in the batch (the common gate/API shape): a narrow
-        # coalesce(1) + mapInPandas replaces the groupBy(qid) exchange,
-        # which AQE splits into two extra stage-jobs — the same shape the
-        # warm IndexSearcher path uses (optimization round 6). The pruned
-        # segment scan is small (the query's matched terms only), so one
-        # task decodes it in milliseconds; big batches keep the
-        # distributed groupBy.
-        def one_group(it):
-            batches = [pdf for pdf in it if len(pdf)]
-            if batches:
-                yield scorer(pd.concat(batches, ignore_index=True))
-
-        results = rows.coalesce(1).mapInPandas(one_group, RESULTS_SCHEMA)
     else:
         results = rows.groupBy("qid").applyInPandas(scorer, RESULTS_SCHEMA)
-    if join_urls:
-        # D6 join-back: results is qids x k rows against a corpus-sized docs
-        # table — broadcast the top-k side EXPLICITLY (VERDICT r03 item 7:
-        # AQE usually picks this at runtime, but the guaranteed plan beats
-        # the usual one at the 100x setting where a sort-merge fallback
-        # would shuffle the whole docs table)
-        docs = cached_parquet(spark, f"{index_dir}/docs").select("doc_id", "url")
-        results = docs.join(F.broadcast(results), "doc_id").select(
-            "qid", "rank", "doc_id", "url", "score"
+    return _with_urls(spark, index_dir, join_urls, results)
+
+
+def _one_query_plan(
+    segments: DataFrame,
+    rows: list[tuple],
+    n_docs: int,
+    avgdl: float,
+    use_bmw: bool,
+    tomb: np.ndarray,
+    include: "np.ndarray | None",
+) -> DataFrame:
+    """ONE query's distributed plan — one Spark job. ``rows``: the query's
+    ``_MATCHED_SCHEMA`` tuples. Its per-term constants (df, neg flag,
+    boost, phrase offsets) ride as literal map expressions over the
+    pruned segment scan instead of a broadcast-joined query relation
+    (that join costs a broadcast job), and the single group is a narrow
+    coalesce(1) + mapInPandas instead of a groupBy exchange (AQE splits
+    that into two more jobs). The one task's closure carries the
+    exclusion and filter arrays."""
+    qid, k, mode = rows[0][:3]
+
+    def per_term(values: list, lit=F.lit):
+        # a literal when every term shares the value, else a term-keyed map
+        if all(v == values[0] for v in values):
+            return lit(values[0])
+        return F.create_map(
+            *[x for r, v in zip(rows, values) for x in (F.lit(r[6]), lit(v))]
+        )[F.col("term")]
+
+    def int_array(offs):
+        if not offs:
+            return F.lit(None).cast("array<int>")
+        return F.array(*[F.lit(int(o)) for o in offs])
+
+    relation = (
+        segments.where(in_list("bucket", sorted({r[8] for r in rows})))
+        .where(in_list("term", [r[6] for r in rows]))
+        .select(
+            F.lit(qid).alias("qid"),
+            F.lit(int(k)).alias("k"),
+            F.lit(mode).alias("mode"),
+            per_term([bool(r[3]) for r in rows]).alias("neg"),
+            per_term([float(r[4]) for r in rows]).alias("boost"),
+            per_term([r[5] for r in rows], int_array).alias("q_offsets"),
+            F.lit(rows[0][9]).cast("long").alias("n_required"),
+            "term",
+            per_term([int(r[7]) for r in rows]).cast("long").alias("df"),
+            "min_doc", "max_doc", "has_positions", "postings", "blockmax",
         )
-    return results
+    )
+    scorer = make_query_scorer(
+        n_docs, avgdl, use_bmw=use_bmw,
+        tombstones=tomb if tomb.size else None, include=include,
+    )
+
+    def one_group(it):
+        import pandas as pd  # noqa: PLC0415 — worker-side import
+
+        batches = [pdf for pdf in it if len(pdf)]
+        if batches:
+            yield scorer(pd.concat(batches, ignore_index=True))
+
+    return relation.coalesce(1).mapInPandas(one_group, RESULTS_SCHEMA)
+
+
+def _with_urls(
+    spark: SparkSession, index_dir: str, join_urls: bool, results: DataFrame
+) -> DataFrame:
+    if not join_urls:
+        return results
+    # D6 join-back: results is qids x k rows against a corpus-sized docs
+    # table — broadcast the top-k side EXPLICITLY (VERDICT r03 item 7:
+    # AQE usually picks this at runtime, but the guaranteed plan beats the
+    # usual one at the 100x setting where a sort-merge fallback would
+    # shuffle the whole docs table)
+    docs = cached_parquet(spark, f"{index_dir}/docs").select("doc_id", "url")
+    return docs.join(F.broadcast(results), "doc_id").select(
+        "qid", "rank", "doc_id", "url", "score"
+    )

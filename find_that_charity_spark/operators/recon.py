@@ -88,9 +88,7 @@ def _driver_pass(
         return None
     n_docs, avgdl = query.load_stats(spark, index_dir)
     tomb = query.read_tombstones(spark, index_dir)
-    matched = query._analyze_batch_driver(
-        spark, index_dir, cached_parquet(spark, f"{index_dir}/dictionary"), qrows
-    )
+    matched = query._analyze_batch_driver(spark, index_dir, qrows)
     if not query._fits_driver_budget(matched):
         return None
     return query._score_driver(

@@ -28,23 +28,6 @@ from find_that_charity_spark.functions.bm25 import bm25_sql
 from find_that_charity_spark.sources.corpus import read_table, widen_scan
 
 
-def relational_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(term, doc_id, tf) from a docs DataFrame — native ops only (C7)."""
-    tokens = docs.select(F.col(id_col).alias("doc_id"), tokenize_expr(text_col).alias("tokens"))
-    return (
-        tokens.select("doc_id", F.explode("tokens").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def relational_doclen(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, dl) — exact token counts (B3)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.size(tokenize_expr(text_col)).alias("dl")
-    )
-
-
 def bm25_topk(
     docs: DataFrame,
     query_text: str,

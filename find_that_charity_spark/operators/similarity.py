@@ -19,14 +19,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 # --- Arrow/numpy kernels (optimization round 6, guide §4.2) -----------------
 # Spark's higher-order functions (zip_with/aggregate) are CodegenFallback:
 # every element of every vector costs an interpreted lambda call, so a

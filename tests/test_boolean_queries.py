@@ -33,12 +33,12 @@ def corpus(spark, index):
     return docs.merge(latest[["url", "text"]], on="url").sort_values("doc_id")
 
 
-def _run(spark, index, queries, mode):
+def _run(spark, index, queries, mode, **kw):
     qdf = spark.createDataFrame(
         [(f"q{i}", q, 10, mode) for i, q in enumerate(queries)],
         "qid string, text string, k int, mode string",
     )
-    return run_queries(spark, index["idx"], qdf).toPandas()
+    return run_queries(spark, index["idx"], qdf, **kw).toPandas()
 
 
 def test_conjunctive_matches_oracle(spark, index, corpus):
@@ -79,3 +79,49 @@ def test_excluded_docs_absent(spark, index, corpus):
     for d in got["doc_id"]:
         toks = set(analyze(by_id.loc[d]))
         assert "w0003" in toks and "w0000" not in toks
+
+
+SELF_NEGATED = ["w0000 w0001 -w0000", "charitable trust -charitable"]
+
+
+def test_self_negated_term_matches_oracle(spark, index, corpus):
+    """A term that is both required and negated: the oracle requires every
+    term of a non-negated word, then drops the docs holding a negated
+    term, so 'a b -a' under bool_and has no hits. Every route — the driver
+    parse, the distributed parse, the warm searcher and a reconcile batch
+    (mode recon, an OR query) — answers as the oracle does."""
+    from find_that_charity_spark.functions.analyzer import analyze_name
+    from find_that_charity_spark.operators.query import IndexSearcher
+    from find_that_charity_spark.operators.recon import reconcile
+
+    ids, texts = corpus["doc_id"].tolist(), corpus["text"].tolist()
+    url_of = dict(zip(corpus["doc_id"], corpus["url"]))
+    searcher = IndexSearcher(spark, index["idx"])
+    try:
+        for mode in ("bool_and", "recon"):
+            routes = {
+                "driver": _run(spark, index, SELF_NEGATED, mode),
+                "distributed": _run(spark, index, SELF_NEGATED, mode, localize_threshold=0),
+            }
+            for i, q in enumerate(SELF_NEGATED):
+                want = brute_force_topk(
+                    ids, texts, q, k=10, conjunctive=mode == "bool_and",
+                    query_analyzer=analyze_name if mode == "recon" else None,
+                )
+                if mode == "bool_and":
+                    assert want == [], q
+                for name, got in routes.items():
+                    mine = got[got["qid"] == f"q{i}"].sort_values("rank")
+                    assert mine["doc_id"].tolist() == [d for d, _ in want], (q, mode, name)
+                    assert mine["score"].tolist() == pytest.approx(
+                        [s for _, s in want], rel=1e-9
+                    ), (q, mode, name)
+                hits = searcher.search(q, 10, mode)
+                assert [d for _, d, _ in hits] == [d for d, _ in want], (q, mode)
+                if mode == "recon":
+                    res = reconcile(spark, index["idx"], {"r": {"query": q, "limit": 10}})
+                    assert [h["id"] for h in res["r"]["result"]] == [
+                        url_of[d] for d, _ in want
+                    ], q
+    finally:
+        searcher.close()

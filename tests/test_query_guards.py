@@ -109,3 +109,21 @@ def test_missing_fuzzy_keys_falls_back(spark, index):
         assert run(localize_threshold=0) == want
     finally:
         shutil.move(fk + "_aside", fk)
+
+
+def test_unknown_terms_keep_url_column(spark, index):
+    """A batch whose terms are all missing from the dictionary still
+    returns the url-bearing schema when ``join_urls=True``, on both parse
+    routes."""
+    from find_that_charity_spark.operators.query import run_queries
+
+    qdf = spark.createDataFrame(
+        [("q0", "zzzqqq", 5, "freetext")], "qid string, text string, k int, mode string"
+    )
+    for kw in ({}, {"localize_threshold": 0}):
+        out = run_queries(spark, index, qdf, join_urls=True, **kw)
+        assert out.columns == ["qid", "rank", "doc_id", "url", "score"], kw
+        assert out.collect() == [], kw
+        assert run_queries(spark, index, qdf, **kw).columns == [
+            "qid", "rank", "doc_id", "score"
+        ], kw

@@ -52,15 +52,18 @@ def test_warm_search_is_one_spark_job(spark, index):
     s.close()
 
 
+PARITY_CASES = [
+    ("charitable trust", "freetext"),
+    ("acme w0001", "freetext"),
+    ("charitable trust", "phrase"),
+    ("charitible", "fuzzy"),
+    ("charitable trust", "bool_and"),
+]
+
+
 def test_warm_search_matches_run_queries(spark, index):
     s = IndexSearcher(spark, index)
-    cases = [
-        ("charitable trust", "freetext"),
-        ("acme w0001", "freetext"),
-        ("charitable trust", "phrase"),
-        ("charitible", "fuzzy"),
-        ("charitable trust", "bool_and"),
-    ]
+    cases = PARITY_CASES
     qdf = spark.createDataFrame(
         [(f"q{i}", q, 10, m) for i, (q, m) in enumerate(cases)],
         "qid string, text string, k int, mode string",
@@ -110,3 +113,49 @@ def test_expand_fuzzy_covers_full_word_alphabet(spark, index):
     assert dual_all == set().union(*brute.values())
     assert s._del_index is not None, "dual index must have been built"
     s.close()
+
+
+def test_over_budget_search_is_one_job_and_same_answer(spark, index, monkeypatch):
+    """Over the driver postings budget the searcher scores through the
+    one-query distributed plan: the same answers as within the budget, in
+    one Spark job warm. A one-query run_queries batch over the budget
+    takes the same plan: 2 jobs (the batch-size take and the plan), one
+    fewer than the broadcast-join plan it replaced."""
+    from find_that_charity_spark.operators import query
+
+    s = IndexSearcher(spark, index)
+    want = {c: s.search(c[0], k=10, mode=c[1]) for c in PARITY_CASES}
+
+    def refuse(*a, **k):
+        raise AssertionError("driver route taken over budget")
+
+    monkeypatch.setattr(query, "_score_driver", refuse)
+    monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
+    sc = spark.sparkContext
+    for i, (q, mode) in enumerate(PARITY_CASES):
+        s.search(q, k=10, mode=mode)  # warm the plan shape
+        group = f"overbudget_{i}"
+        sc.setJobGroup(group, "over-budget warm query job count")
+        got = s.search(q, k=10, mode=mode)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs == 1, f"{q} ({mode}): {n_jobs} jobs (expected 1 warm)"
+        assert got, (q, mode)
+        assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in want[(q, mode)]]
+        np.testing.assert_allclose(
+            [x for _, _, x in got], [x for _, _, x in want[(q, mode)]], rtol=1e-12
+        )
+    s.close()
+
+    qdf = spark.createDataFrame(
+        [("q0", "charitable trust", 10, "freetext")],
+        "qid string, text string, k int, mode string",
+    )
+    run_queries(spark, index, qdf).collect()  # warm
+    sc.setJobGroup("overbudget_batch", "over-budget one-query batch job count")
+    rows = run_queries(spark, index, qdf).collect()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("overbudget_batch"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs == 2, n_jobs
+    assert [(r["rank"], r["doc_id"]) for r in sorted(rows, key=lambda r: r["rank"])] == [
+        (r, d) for r, d, _ in want[("charitable trust", "freetext")]
+    ]
