@@ -229,7 +229,7 @@ def _q_facet_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_facet_lang_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Facet gate over the UPDATED index pre-vacuum: superseded rows
     still sit in the postings and DO contain flagship terms, so the
-    tombstone-exclusion anti-join inside facet_counts is load-bearing —
+    tombstone exclusion inside facet_counts' match-set kernel is load-bearing —
     the oracle counts only the live post-update corpus."""
     from find_that_charity_spark.operators.facets import facet_counts
 

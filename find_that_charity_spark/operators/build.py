@@ -81,13 +81,6 @@ SEGMENT_SCHEMA = StructType(
 )
 
 
-# term-hash-shuffle twin of SEGMENT_SCHEMA: the encode group emits the
-# 64-bit term hash; the term string is joined back before the sink
-SEGMENT_SCHEMA_T64 = StructType(
-    [StructField("t64", LongType()), *SEGMENT_SCHEMA.fields[1:]]
-)
-
-
 @dataclass
 class BuildConfig:
     num_buckets: int = 32          # term buckets (segment partition key)
@@ -102,15 +95,6 @@ class BuildConfig:
     # (off by default: corpus-sized shuffles got narrowed to ~1.2 task
     # waves/core, idling stage tails — BENCH/BASELINE.md; turn on for
     # toy corpora where per-task overhead dominates)
-    term_hash_shuffle: bool = False
-    # Shuffle (xxhash64(term), doc_id, dl[, pos]) through the inversion
-    # exchange instead of raw term strings, restoring strings via a
-    # distinct-terms map joined onto the (segment-count-sized) encoded
-    # output. A verified-collision-free fast path: the build computes the
-    # term map anyway-sized distinct and ABORTS on any 64-bit collision
-    # (P ~ |V|^2 / 2^65 — detectable, never silent). Postings bytes are
-    # identical to the string path (doc order within a term is unchanged).
-    # Measured trade-off in docs/SCALE.md; default follows the measurement.
     block_codec: str = "varint"
     # Posting-block stream codec: "varint" (delta+varint, default) or
     # "pfor" (PForDelta/NewPFD — functions/pfor.py), the two encodings
@@ -148,7 +132,7 @@ def _extract_text() -> "F.Column":
     return F.coalesce(F.col("text"), stripped)
 
 
-def _encode_group(positions: bool = False, term_key: str = "term", codec: str = "varint"):
+def _encode_group(positions: bool = False, codec: str = "varint"):
     """C9: per-(bucket, salt) group of TOKEN-level rows -> one segment row
     per term.
 
@@ -156,13 +140,7 @@ def _encode_group(positions: bool = False, term_key: str = "term", codec: str = 
     aggregation happens HERE in numpy (run-length over the sorted group)
     instead of in a dedicated groupBy stage, which removes one full
     shuffle+sort of the corpus from the build (map-side combine saved
-    ~35% of bytes but cost a whole extra exchange).
-
-    ``term_key='t64'`` is the term-hash-shuffle variant: rows carry the
-    64-bit term hash instead of the string; the caller joins strings back
-    onto the (term-count-sized) output. Postings bytes per term are
-    identical either way — only the term ordering inside the group sort
-    differs, which no reader depends on."""
+    ~35% of bytes but cost a whole extra exchange)."""
 
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
         # rows arrive PACKED (docdl = doc_id << 22 | dl, gkey = bucket <<
@@ -171,12 +149,12 @@ def _encode_group(positions: bool = False, term_key: str = "term", codec: str = 
         # shuffle sort. Sorting by docdl == sorting by doc_id (dl is a
         # function of the doc), so postings order — and therefore segment
         # bytes — are identical to the unpacked layout.
-        sort_cols = [term_key, "docdl", "pos"] if positions else [term_key, "docdl"]
+        sort_cols = ["term", "docdl", "pos"] if positions else ["term", "docdl"]
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
         gkey = int(pdf["gkey"].iloc[0])
         bucket, salt = gkey >> 32, gkey & 0xFFFFFFFF
         seg_id = f"b{bucket:05d}s{salt:05d}"
-        terms = pdf[term_key].to_numpy()
+        terms = pdf["term"].to_numpy()
         docdl = pdf["docdl"].to_numpy(dtype=np.int64)
         docs_all = docdl >> _DL_BITS
         dls_all = docdl & ((1 << _DL_BITS) - 1)
@@ -224,10 +202,7 @@ def _encode_group(positions: bool = False, term_key: str = "term", codec: str = 
                     ],
                 )
             )
-        cols = SEGMENT_SCHEMA.fieldNames()
-        if term_key != "term":
-            cols = [term_key] + cols[1:]
-        return pd.DataFrame(out, columns=cols)
+        return pd.DataFrame(out, columns=SEGMENT_SCHEMA.fieldNames())
 
     return encode
 
@@ -672,7 +647,6 @@ def _build_index_body(
     pending_chunks = [c for c in range(cfg.segment_chunks) if not mf.is_done("segments", str(c))]
     if pending_chunks:
         tf = None
-        term_map = None
         for chunk in pending_chunks:
             if tf is None:
                 tf = tf_table().withColumn(
@@ -709,29 +683,6 @@ def _build_index_body(
                         F.col("salt")
                     ),
                 ).drop("salt", "bucket")
-                if cfg.term_hash_shuffle:
-                    # swap the shuffled payload from the term string to its
-                    # 64-bit hash (bucket/salt already derived map-side);
-                    # strings are restored post-encode via term_map below
-                    tf = tf.withColumn("t64", F.xxhash64("term")).drop("term")
-                    term_map = (
-                        tokenized.select(F.explode("tokens").alias("term"))
-                        .distinct()
-                        .withColumn("t64", F.xxhash64("term"))
-                        .persist()
-                    )
-                    n_coll = (
-                        term_map.groupBy("t64")
-                        .count()
-                        .where(F.col("count") > 1)
-                        .count()
-                    )
-                    if n_coll:
-                        term_map.unpersist()
-                        raise ValueError(
-                            f"xxhash64 term-hash collision ({n_coll} hashes) — "
-                            "rebuild with term_hash_shuffle=False"
-                        )
                 if len(pending_chunks) > 1:
                     # cache tf only when several chunk jobs will re-read it;
                     # a single-chunk build streams explode->encode directly
@@ -762,17 +713,9 @@ def _build_index_body(
                 ),
             )
             segs = part.repartition(n_enc, "gkey").groupBy("gkey").applyInPandas(
-                _encode_group(
-                    positions=cfg.positions,
-                    term_key="t64" if cfg.term_hash_shuffle else "term",
-                    codec=cfg.block_codec,
-                ),
-                SEGMENT_SCHEMA_T64 if cfg.term_hash_shuffle else SEGMENT_SCHEMA,
+                _encode_group(positions=cfg.positions, codec=cfg.block_codec),
+                SEGMENT_SCHEMA,
             )
-            if cfg.term_hash_shuffle:
-                # restore term strings on the term-count-sized output (a
-                # dictionary-scale join, not a corpus-scale one)
-                segs = segs.join(term_map, "t64").select(*SEGMENT_SCHEMA.fieldNames())
             segs.write.mode("overwrite").partitionBy("bucket").parquet(
                 f"{index_dir}/segments/chunk={chunk}"
             )
@@ -793,8 +736,6 @@ def _build_index_body(
             )
         if tf is not None and len(pending_chunks) > 1:
             tf.unpersist()
-        if cfg.term_hash_shuffle and term_map is not None:
-            term_map.unpersist()
 
     # ---- stage: dictionary (C11) — BEFORE compact since round 5 ---------
     # The dictionary aggregation (term, bucket -> df, cf, n_segments) IS

@@ -4,12 +4,17 @@ The ES highlight analog, split exactly the way Lucene splits it:
 
 - **first_hit** comes from the INDEX's positional postings (the fast-
   vector-highlighter model: term vectors are stored at build time, the
-  highlighter never re-analyzes the document) — decoded with the same
-  numpy block kernels the phrase scorer uses, restricted to the k result
-  docs via block skip pointers;
+  highlighter never re-analyzes the document). One kernel,
+  :func:`_first_hit_kernel`, decodes the query terms' pruned segment rows
+  (``query.pruned_segments``: bucket, term and doc-range overlap with
+  the k result ids) with the phrase scorer's numpy block decoder. Within
+  the driver budget (``query._fits_driver_budget``) it runs in-process
+  on the collected rows; over it, under ``mapInPandas`` in executors,
+  reduced to one ``min(pos0)`` row per result doc before the collect;
 - **snippet** re-analyzes the STORED field of only the k result rows (the
-  plain-highlighter model): a pushed IN-list probe of the corpus, JVM
-  ``slice`` + ``array_join`` over the analyzed tokens — never a scan-wide
+  plain-highlighter model): one pushed IN-list probe of the corpus, then
+  the ASCII tokenization (``ASCII_TOKEN_PATTERN`` on lowered text) and
+  the window slice on the driver, for both routes — never a scan-wide
   tokenize.
 
 Both are exact and deterministic; a test pins first_hit-from-postings ==
@@ -23,65 +28,54 @@ pointers drop the rest) — independent of corpus size.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from find_that_charity_spark.functions.analyzer import analyze, tokenize_expr
+from find_that_charity_spark.functions.analyzer import ASCII_TOKEN_PATTERN, analyze
+from find_that_charity_spark.operators import query
 from find_that_charity_spark.operators.query import (
     _decode_cursor_positions,
     _make_cursor,
-    cached_parquet,
-    run_queries,
+    _member_mask,
 )
 from find_that_charity_spark.plans.checkpoint import check_format
 
 _HIT_SCHEMA = "doc_id long, pos0 long"
 
 
-def _make_first_hit_decoder(ids_sorted: np.ndarray):
-    """mapInPandas kernel: segment rows -> (doc_id, first 0-based position
-    of this term in that doc), doc_id restricted to ``ids_sorted``."""
+def _first_hit_kernel(ids_sorted: np.ndarray):
+    """Segment rows (has_positions, postings, blockmax) -> (doc_id, pos0):
+    the first 0-based position of each row's term in each doc of
+    ``ids_sorted`` it holds. Run in-process or under mapInPandas."""
+    lo, hi = int(ids_sorted[0]), int(ids_sorted[-1]) + 1
 
-    def decode(it):
-        for pdf in it:
-            doc_l, pos_l = [], []
-            for has_pos, blob, blockmax in zip(
-                pdf["has_positions"], pdf["postings"], pdf["blockmax"]
-            ):
-                assert bool(has_pos), (
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        doc_l, pos_l = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for has_pos, blob, blockmax in zip(
+            pdf["has_positions"], pdf["postings"], pdf["blockmax"]
+        ):
+            if not has_pos:
+                raise ValueError(
                     "highlight_topk needs a positional index "
                     "(BuildConfig.positions=True)"
                 )
-                c = _make_cursor(0.0, blob, blockmax, 1.0)
-                docs, tfs, _dls, pos = _decode_cursor_positions(
-                    c, int(ids_sorted[0]), int(ids_sorted[-1]) + 1
-                )
-                if not docs.size:
-                    continue
-                idx = np.searchsorted(ids_sorted, docs)
-                idx[idx == ids_sorted.size] = 0
-                mask = ids_sorted[idx] == docs
-                if not mask.any():
-                    continue
-                # positions are per-doc ascending; the first occurrence of
-                # this term in doc i is the head of its flat-position slice
-                bounds = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
-                doc_l.append(docs[mask])
-                pos_l.append(pos[bounds[:-1][mask]])
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(doc_l)
-                    if doc_l
-                    else np.empty(0, np.int64),
-                    "pos0": np.concatenate(pos_l)
-                    if pos_l
-                    else np.empty(0, np.int64),
-                }
-            )
+            c = _make_cursor(0.0, blob, blockmax, 1.0)
+            docs, tfs, _dls, pos = _decode_cursor_positions(c, lo, hi)
+            mask = _member_mask(ids_sorted, docs)
+            # positions are per-doc ascending; the first occurrence of
+            # this term in doc i is the head of its flat-position slice
+            bounds = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
+            doc_l.append(docs[mask])
+            pos_l.append(pos[bounds[:-1][mask]])
+        return pd.DataFrame(
+            {"doc_id": np.concatenate(doc_l), "pos0": np.concatenate(pos_l)}
+        )
 
-    return decode
+    return kernel
 
 
 def highlight_topk(
@@ -106,8 +100,6 @@ def highlight_topk(
     result url back to its ``id_col`` value (default: trailing digits).
     """
     if url_to_id is None:
-        import re
-
         url_to_id = lambda u: int(re.search(r"(\d+)$", u).group(1))  # noqa: E731
     check_format(index_dir)
     terms = sorted(set(analyze(query_text)))
@@ -117,8 +109,8 @@ def highlight_topk(
         "qid string, text string, k int, mode string",
     )
     # top-k rows are tiny (k) — driver-side from here on
-    res = run_queries(spark, index_dir, qdf, use_bmw=True, join_urls=True,
-                      prefetched_qrows=qrows)
+    res = query.run_queries(spark, index_dir, qdf, use_bmw=True, join_urls=True,
+                            prefetched_qrows=qrows)
     top = res.select("rank", "doc_id", "score", "url").collect()
     out_schema = (
         "doc_id bigint, rank int, score_mil bigint, first_hit int, "
@@ -128,140 +120,54 @@ def highlight_topk(
         return spark.createDataFrame([], out_schema)
     ids_sorted = np.array(sorted(int(r["doc_id"]) for r in top), dtype=np.int64)
 
-    # positional postings of the query terms, pruned three ways: bucket
-    # partition filter, term IN-list, and doc-range overlap with the k ids
-    # (dictionary probe mtime-cached driver-side — zero jobs warm, r06)
-    from find_that_charity_spark.operators.query import (
-        _driver_score_max_postings,
-        probe_dictionary,
-    )
-
-    by_term = probe_dictionary(spark, index_dir, terms)
-    buckets = sorted({b for _, b in by_term.values()})
-    hit_terms = sorted(by_term)
-    seg_src = (
-        cached_parquet(spark, f"{index_dir}/segments")
-        .where(F.col("bucket").isin(buckets))
-        .where(F.col("term").isin(hit_terms))
-        .where(
-            (F.col("max_doc") >= int(ids_sorted[0]))
-            & (F.col("min_doc") <= int(ids_sorted[-1]))
-        )
-        .select("has_positions", "postings", "blockmax")
-    )
-
-    # Fused driver tail (optimization round 6 batch 2, VERDICT r05 item 7):
-    # the three sequential job groups (top-k -> positional decode ->
-    # stored-row re-analysis) stacked ~1 s of constant stage latency. The
-    # postings volume of the query terms is known exactly from the
-    # dictionary probe, so under the same bound the driver-side scoring
-    # tail uses, the pruned segment rows and the k stored rows are pulled
-    # with two pushed IN-list jobs and the first-hit decode + snippet
-    # slice run in-process — the SAME numpy kernels / the byte-equal
-    # ASCII tokenization (`[a-z0-9]+` on lowered text, identical to
-    # tokenize_expr). Over-bound queries keep the distributed tail below.
-    total_postings = sum(df for df, _ in by_term.values())
-    if total_postings <= _driver_score_max_postings():
-        first_hit_of: dict[int, int] = {}
-        for sr in seg_src.collect():
-            assert bool(sr["has_positions"]), (
-                "highlight_topk needs a positional index "
-                "(BuildConfig.positions=True)"
-            )
-            c = _make_cursor(0.0, sr["postings"], sr["blockmax"], 1.0)
-            docs, tfs, _dls, pos = _decode_cursor_positions(
-                c, int(ids_sorted[0]), int(ids_sorted[-1]) + 1
-            )
-            if not docs.size:
-                continue
-            idx = np.searchsorted(ids_sorted, docs)
-            idx[idx == ids_sorted.size] = 0
-            mask = ids_sorted[idx] == docs
-            if not mask.any():
-                continue
-            bounds = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
-            for d, p0 in zip(
-                docs[mask].tolist(), pos[bounds[:-1][mask]].tolist()
-            ):
-                prev = first_hit_of.get(d)
-                if prev is None or p0 < prev:
-                    first_hit_of[d] = int(p0)
-        corpus_ids = sorted({url_to_id(r["url"]) for r in top})
-        stored_rows = (
-            corpus.where(F.col(id_col).isin(corpus_ids))
-            .select(F.col(id_col).cast("long").alias("corpus_id"), text_col)
+    # first hits: the query terms' positional postings, pruned to the
+    # segments overlapping the k ids (dictionary probe mtime-cached
+    # driver-side — zero jobs warm, r06)
+    by_term = query.probe_dictionary(spark, index_dir, terms)
+    rel = query.pruned_segments(
+        query.cached_parquet(spark, f"{index_dir}/segments"), by_term,
+        (ids_sorted[0], ids_sorted[-1]),
+    ).select("has_positions", "postings", "blockmax")
+    kernel = _first_hit_kernel(ids_sorted)
+    if query._fits_driver_budget(sum(df for df, _ in by_term.values())):
+        hits = kernel(pd.DataFrame(rel.collect(), columns=rel.columns))
+        first_hit_of = hits.groupby("doc_id")["pos0"].min().to_dict()
+    else:
+        first_hit_of = {
+            r["doc_id"]: r["pos0"]
+            for r in rel.mapInPandas(lambda it: map(kernel, it), _HIT_SCHEMA)
+            .groupBy("doc_id")
+            .agg(F.min("pos0").alias("pos0"))
             .collect()
-        )
-        import re as _re
-
-        from find_that_charity_spark.functions.analyzer import ASCII_TOKEN_PATTERN
-
-        ascii_re = _re.compile(ASCII_TOKEN_PATTERN)
-        toks_of = {
-            int(r["corpus_id"]): ascii_re.findall((r[text_col] or "").lower())
-            for r in stored_rows
         }
-        out_rows = []
-        for r in top:
-            d = int(r["doc_id"])
-            cid = url_to_id(r["url"])
-            # inner-join semantics, identical to the distributed plan: a
-            # top doc missing a first hit or a stored row drops its row
-            if d not in first_hit_of or cid not in toks_of:
-                continue
-            fh = first_hit_of[d] + 1  # 1-based, as the JVM agg computes
-            toks = toks_of[cid]
-            snippet = " ".join(toks[fh - 1 : fh - 1 + window])
-            out_rows.append(
-                (cid, int(r["rank"]), int(np.floor(r["score"] * 1e4 + 0.5)),
-                 fh, snippet)
-            )
-        if not out_rows:
-            return spark.createDataFrame([], out_schema)
-        return spark.createDataFrame(
-            pd.DataFrame(
-                out_rows,
-                columns=["doc_id", "rank", "score_mil", "first_hit", "snippet"],
-            ),
-            schema=out_schema,
-        )
 
-    first_hits = (
-        seg_src.mapInPandas(_make_first_hit_decoder(ids_sorted), _HIT_SCHEMA)
-        .groupBy("doc_id")
-        .agg((F.min("pos0") + F.lit(1)).cast("int").alias("first_hit"))
-    )
-
-    results = spark.createDataFrame(
-        [
-            (
-                int(r["doc_id"]),
-                int(r["rank"]),
-                int(np.floor(r["score"] * 1e4 + 0.5)),
-                url_to_id(r["url"]),
-            )
-            for r in top
-        ],
-        "doc_id long, rank int, score_mil long, corpus_id long",
-    )
-    # snippet: pushed IN-list on the stored-field scan — k rows, re-
-    # analyzed JVM-side, sliced at first_hit (Spark slice is 1-based)
+    # snippets: the k stored rows, re-analyzed and sliced at first_hit
     corpus_ids = sorted({url_to_id(r["url"]) for r in top})
-    stored = corpus.where(F.col(id_col).isin(corpus_ids)).select(
-        F.col(id_col).cast("long").alias("corpus_id"),
-        tokenize_expr(text_col).alias("toks"),
-    )
-    return (
-        F.broadcast(results)
-        .join(first_hits, "doc_id")
-        .join(stored, "corpus_id")
-        .select(
-            F.col("corpus_id").alias("doc_id"),
-            "rank",
-            "score_mil",
-            "first_hit",
-            F.array_join(
-                F.slice(F.col("toks"), F.col("first_hit"), F.lit(window)), " "
-            ).alias("snippet"),
+    ascii_re = re.compile(ASCII_TOKEN_PATTERN)
+    toks_of = {
+        int(r["corpus_id"]): ascii_re.findall((r[text_col] or "").lower())
+        for r in corpus.where(F.col(id_col).isin(corpus_ids))
+        .select(F.col(id_col).cast("long").alias("corpus_id"), text_col)
+        .collect()
+    }
+    out_rows = []
+    for r in top:
+        d = int(r["doc_id"])
+        cid = url_to_id(r["url"])
+        # inner-join semantics: a top doc missing a first hit or a stored
+        # row drops its row
+        if d not in first_hit_of or cid not in toks_of:
+            continue
+        fh = int(first_hit_of[d]) + 1  # 1-based
+        snippet = " ".join(toks_of[cid][fh - 1 : fh - 1 + window])
+        out_rows.append(
+            (cid, int(r["rank"]), int(np.floor(r["score"] * 1e4 + 0.5)), fh, snippet)
         )
+    if not out_rows:
+        return spark.createDataFrame([], out_schema)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            out_rows, columns=["doc_id", "rank", "score_mil", "first_hit", "snippet"]
+        ),
+        schema=out_schema,
     )

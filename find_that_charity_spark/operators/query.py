@@ -5,10 +5,11 @@ Batch top-k retrieval over the segment index:
     queries -> parse_query (D1, one pure-Python parser for every route)
       -> dictionary lookup (D2: driver probe, or a broadcast join for
          batches over 10,000 queries, parsed under applyInPandas)
-      -> partition-pruned segment fetch, bucket IN-list (D3, no shuffle)
+      -> pruned segment fetch, ``pruned_segments`` (D3: bucket partition
+         filter + term IN-list, no shuffle)
       -> decode + Block-Max WAND + BM25 (D4): in the driver when the
-         batch's postings fit ``_driver_score_max_postings()``, else in
-         executor Python workers
+         batch's postings fit ``_fits_driver_budget``, else in executor
+         Python workers
       -> deterministic top-k order (D5, B4) -> optional url join-back (D6)
 
 Block-Max WAND here is a *window-sweep* variant, chosen so the Python side
@@ -240,10 +241,6 @@ def _decode_cursor_range(
     if not docs_l:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     return np.concatenate(docs_l), np.concatenate(score_l)
-
-
-def _decode_cursor_full(c: _Cursor, avgdl: float) -> tuple[np.ndarray, np.ndarray]:
-    return _decode_cursor_range(c, avgdl)
 
 
 def _decode_cursor_positions(
@@ -731,7 +728,7 @@ class IndexSearcher:
     is looked up through ``probe_dictionary``), the tombstones and the
     segments reader. Each query then runs the batch routes' own code:
     ``parse_query``, then ``_score_driver`` over the pinned reader while
-    its postings fit ``_driver_score_max_postings()``, else the one-query
+    its postings fit ``_fits_driver_budget``, else the one-query
     distributed plan — one Spark job either way when warm. Reopen the
     handle after appends, compaction or vacuum. p50/p99 latency in BENCH
     uses this, matching the BASELINE.md 'warm index' protocol (and
@@ -777,7 +774,7 @@ class IndexSearcher:
         rows = _matched_rows([("q", int(k), mode, terms, n_required)], by_term)
         if all(r[3] for r in rows):
             return []  # no positive term in the dictionary
-        if _fits_driver_budget(rows):
+        if _fits_driver_budget(sum(r[7] for r in rows)):
             res = _score_driver(
                 self.spark, self.index_dir, rows, self.n_docs, self.avgdl, True,
                 self._tomb, None, False, segments=self.segments,
@@ -1083,6 +1080,11 @@ def in_list(col: str, values) -> "F.Column":
     return F.expr(f"{ident} IN ({', '.join(parts)})")
 
 
+# the driver's query bound: a batch of at most this many queries is parsed
+# and probed on the driver; a larger one is parsed in executors
+DRIVER_MAX_QUERIES = 10_000
+
+
 def _driver_score_max_postings() -> int:
     """Postings-volume bound for the driver-side scoring tail. The default
     (2M postings ≈ a few MB of blobs, positions included) keeps the pull
@@ -1091,11 +1093,31 @@ def _driver_score_max_postings() -> int:
     return int(os.environ.get("FTC_DRIVER_SCORE_MAX_POSTINGS", "2000000"))
 
 
-def _fits_driver_budget(matched_rows: list[tuple]) -> bool:
-    """The driver-tail routing rule: the batch's exact postings volume
-    (sum of matched df, the 8th field of a matched row) is within
-    ``_driver_score_max_postings()``."""
-    return sum(int(r[7]) for r in matched_rows) <= _driver_score_max_postings()
+def _fits_driver_budget(postings: int) -> bool:
+    """The one driver-vs-executor routing rule, for every entry point: a
+    postings volume (the sum of the matched terms' df, known exactly from
+    the dictionary probe) within ``_driver_score_max_postings()`` is
+    fetched and decoded on the driver, a larger one in executors."""
+    return postings <= _driver_score_max_postings()
+
+
+def pruned_segments(
+    segments: DataFrame,
+    by_term: dict[str, tuple[int, int]],
+    doc_range: "tuple[int, int] | None" = None,
+) -> DataFrame:
+    """The segment rows of ``by_term``'s terms ({term: (df, bucket)}): a
+    bucket partition filter (D3) and a term IN-list, both pushed to the
+    parquet scan, and given ``doc_range`` = (lo, hi), inclusive, only the
+    rows whose doc range overlaps it. Every postings fetch starts here,
+    collected on the driver or decoded in executors."""
+    rel = segments.where(
+        in_list("bucket", sorted({b for _, b in by_term.values()}))
+    ).where(in_list("term", sorted(by_term)))
+    if doc_range is not None:
+        lo, hi = doc_range
+        rel = rel.where((F.col("max_doc") >= int(lo)) & (F.col("min_doc") <= int(hi)))
+    return rel
 
 
 def _score_driver(
@@ -1128,11 +1150,9 @@ def _score_driver(
     ``segments``: a pinned segments reader (``IndexSearcher``'s); by
     default the mtime-checked ``cached_parquet`` one."""
     segs = segments if segments is not None else cached_parquet(spark, f"{index_dir}/segments")
-    buckets = sorted({r[8] for r in matched_rows})
-    terms = sorted({r[6] for r in matched_rows})
+    terms = {r[6]: (r[7], r[8]) for r in matched_rows}
     seg_rows = (
-        segs.where(in_list("bucket", buckets))
-        .where(in_list("term", terms))
+        pruned_segments(segs, terms)
         .select("term", "min_doc", "max_doc", "has_positions", "postings", "blockmax")
         .collect()
         if terms else []
@@ -1212,7 +1232,7 @@ def run_queries(
     use_bmw: bool = True,
     join_urls: bool = False,
     doc_shards: int | None = None,
-    localize_threshold: int = 10_000,
+    localize_threshold: int = DRIVER_MAX_QUERIES,
     exclude_doc_ids: "np.ndarray | None" = None,
     include_doc_ids: "np.ndarray | None" = None,
     prefetched_qrows: list | None = None,
@@ -1286,7 +1306,9 @@ def run_queries(
         # stop-word case) keeps the distributed scoring tail. Guard is
         # parameterised, never a result cache: every call re-reads the
         # store.
-        if (not doc_shards or doc_shards <= 1) and _fits_driver_budget(matched):
+        if (not doc_shards or doc_shards <= 1) and _fits_driver_budget(
+            sum(r[7] for r in matched)
+        ):
             return spark.createDataFrame(
                 _score_driver(
                     spark, index_dir, matched, n_docs, avgdl, use_bmw,
@@ -1427,29 +1449,29 @@ def _score_matched(
                 spark, index_dir, join_urls,
                 _one_query_plan(segments, matched, n_docs, avgdl, use_bmw, tomb, include),
             )
-        # row layout follows _MATCHED_SCHEMA: bucket is the 9th field
-        buckets = sorted({r[8] for r in matched})
+        # row layout follows _MATCHED_SCHEMA: term, df, bucket are 6-8
+        by_term = {r[6]: (r[7], r[8]) for r in matched}
         matched = spark.createDataFrame(matched, _MATCHED_SCHEMA)
         matched_side = F.broadcast(matched.drop("bucket"))
     else:
         # a huge query batch (|queries| x |terms| beyond driver comfort)
-        # keeps the matched set distributed — bucket pruning survives via
-        # a distinct-buckets collect (bounded by num_buckets), and the
-        # segments join falls back to a shuffle join. localCheckpoint
-        # (eager): materializes once (the buckets collect below + the
+        # keeps the matched set distributed — scan pruning survives via a
+        # distinct-terms collect (bounded by the batch's vocabulary), and
+        # the segments join falls back to a shuffle join. localCheckpoint
+        # (eager): materializes once (the terms collect below + the
         # scoring join both read it), truncates the parse lineage, and is
         # reclaimed by the ContextCleaner when the returned DataFrame is
         # dropped — unlike persist(), which this long-lived function could
         # never safely unpersist.
         matched = matched.localCheckpoint()
-        buckets = sorted(
-            r["bucket"] for r in matched.select("bucket").distinct().collect()
-        )
-        if not buckets:
+        by_term = {
+            r["term"]: (r["df_global"], r["bucket"])
+            for r in matched.select("term", "df_global", "bucket").distinct().collect()
+        }
+        if not by_term:
             return spark.createDataFrame([], _results_schema(join_urls))
         matched_side = matched.drop("bucket")
-    # D3: bucket IN-list reaches the parquet scan as a partition filter
-    rows = segments.where(F.col("bucket").isin(buckets)).join(
+    rows = pruned_segments(segments, by_term).join(
         matched_side,
         "term",
     ).select(
@@ -1531,8 +1553,7 @@ def _one_query_plan(
         return F.array(*[F.lit(int(o)) for o in offs])
 
     relation = (
-        segments.where(in_list("bucket", sorted({r[8] for r in rows})))
-        .where(in_list("term", [r[6] for r in rows]))
+        pruned_segments(segments, {r[6]: (r[7], r[8]) for r in rows})
         .select(
             F.lit(qid).alias("qid"),
             F.lit(int(k)).alias("k"),

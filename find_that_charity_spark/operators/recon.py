@@ -80,16 +80,16 @@ def _driver_pass(
     for the union of the result ids.
 
     Returns the pandas (qid, rank, doc_id, url, score) frame, or None when
-    the batch is over ``run_queries``' driver bounds (more than 10,000
-    queries, or more postings than ``_driver_score_max_postings()``): the
+    the batch is over ``run_queries``' driver bounds (more than
+    ``DRIVER_MAX_QUERIES`` queries, or over ``_fits_driver_budget``): the
     caller then takes the distributed route. Query functions are looked
     up through the module so a wrapped (traced) one is the one called."""
-    if len(qrows) > 10_000:
+    if len(qrows) > query.DRIVER_MAX_QUERIES:
         return None
     n_docs, avgdl = query.load_stats(spark, index_dir)
     tomb = query.read_tombstones(spark, index_dir)
     matched = query._analyze_batch_driver(spark, index_dir, qrows)
-    if not query._fits_driver_budget(matched):
+    if not query._fits_driver_budget(sum(r[7] for r in matched)):
         return None
     return query._score_driver(
         spark, index_dir, matched, n_docs, avgdl, True, tomb, None,
@@ -117,12 +117,12 @@ def reconcile(
     top-k exact over the allowed set), one exclusion set per constraint
     signature.
 
-    Spark jobs per batch: on the driver route (at most 10,000 queries and
-    the batch's postings within ``_driver_score_max_postings()``, decided
-    once for the whole batch) one docs scan per FILTERED signature, plus
-    one postings fetch and one url probe for the whole batch, plus one
-    dictionary probe only when the batch has terms the driver has not
-    seen before. Over either bound each signature runs ``run_queries``
+    Spark jobs per batch: on the driver route (at most
+    ``DRIVER_MAX_QUERIES`` queries and the batch's postings within
+    ``_fits_driver_budget``, decided once for the whole batch) one docs
+    scan per FILTERED signature, plus one postings fetch and one url
+    probe for the whole batch, plus one dictionary probe only when the
+    batch has terms the driver has not seen before. Over either bound each signature runs ``run_queries``
     on its own (the distributed route)."""
     import json
 
@@ -164,7 +164,7 @@ def reconcile(
                 (r["qid"], r["rank"], r["url"], r["score"])
                 for r in run_queries(
                     spark, index_dir, qdf, join_urls=True, exclude_doc_ids=excl,
-                    prefetched_qrows=qrows if len(qrows) <= 10_000 else None,
+                    prefetched_qrows=qrows if len(qrows) <= query.DRIVER_MAX_QUERIES else None,
                 ).collect()
             )
 
@@ -333,9 +333,10 @@ def add_to_csv(
     # (same contract as run_queries.prefetched_qrows — they must mirror
     # user_df): the take_wide size probe on a pickled-RDD-backed local
     # relation costs a ~0.3 s Python-worker job (optimization round 6)
-    probe = prefetched_rows if prefetched_rows is not None else take_wide(user_df, 10_001)
+    bound = query.DRIVER_MAX_QUERIES
+    probe = prefetched_rows if prefetched_rows is not None else take_wide(user_df, bound + 1)
     res = None
-    if len(probe) <= 10_000:
+    if len(probe) <= bound:
         seen: dict[str, None] = {}
         for r in probe:
             q = r[query_col]
@@ -371,20 +372,18 @@ def add_to_csv(
         # plain-list createDataFrame parallelizes into defaultParallelism
         # pickled slices, so the caller's collect paid ~0.4 s of Python-
         # worker tasks (measured); the pandas path ships one Arrow batch
-        # the JVM evaluates without Python workers. Fallback for user
-        # column types Arrow can't convert keeps the old path.
-        try:
-            pdf = pd.DataFrame(
-                out_rows, columns=[f.name for f in schema.fields]
-            ).astype(object)
-            # missing values must reach Spark as NULL, not float NaN: the
-            # non-Arrow createDataFrame path would otherwise ship NaN,
-            # and CAST(NaN AS BIGINT) is 0 — observably different from a
-            # null match_score (caught by the driver-style verify run)
-            pdf = pdf.where(pd.notnull(pdf), None)
-            return spark.createDataFrame(pdf, schema)
-        except Exception:
-            return spark.createDataFrame(out_rows, schema)
+        # the JVM evaluates without Python workers. A user column type
+        # Arrow cannot convert takes Spark's own non-Arrow fallback
+        # (spark.sql.execution.arrow.pyspark.fallback.enabled).
+        pdf = pd.DataFrame(
+            out_rows, columns=[f.name for f in schema.fields]
+        ).astype(object)
+        # missing values must reach Spark as NULL, not float NaN: the
+        # non-Arrow createDataFrame path would otherwise ship NaN, and
+        # CAST(NaN AS BIGINT) is 0 — observably different from a null
+        # match_score (caught by the driver-style verify run)
+        pdf = pdf.where(pd.notnull(pdf), None)
+        return spark.createDataFrame(pdf, schema)
     keyed = user_df.withColumn("_qid", F.md5(F.col(query_col)))
     qdf = keyed.select(
         F.col("_qid").alias("qid"),

@@ -76,48 +76,26 @@ def cos_vs_query_udf(q: np.ndarray):
 def cos_pair_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
     """pandas_udf: cosine(va, vb) element-wise over two vector columns.
     NULL when either side is null or the lengths differ (zip_with pads
-    with nulls → null dot in the JVM twin); pairs whose shared length
-    differs from the batch's modal length compute on a scalar side path."""
+    with nulls → null dot in the JVM twin). Pairs are grouped by their
+    shared length and each group is reduced by one batched ``einsum``, so
+    a pair's cosine does not depend on the other pairs in its batch."""
     a_vals = [None if v is None else np.asarray(v, np.float64) for v in va]
     b_vals = [None if v is None else np.asarray(v, np.float64) for v in vb]
-    n = len(a_vals)
-    out = np.full(n, np.nan)
-    missing = np.ones(n, dtype=bool)
-    lens: dict[int, int] = {}
-    for v in a_vals:
-        if v is not None:
-            lens[v.shape[0]] = lens.get(v.shape[0], 0) + 1
-    D = max(lens, key=lambda k: (lens[k], -k)) if lens else None
-    fast = [
-        i
-        for i in range(n)
-        if D is not None
-        and a_vals[i] is not None
-        and b_vals[i] is not None
-        and a_vals[i].shape[0] == D
-        and b_vals[i].shape[0] == D
-    ]
-    if fast:
-        a = np.stack([a_vals[i] for i in fast])
-        b = np.stack([b_vals[i] for i in fast])
+    out = np.full(len(a_vals), np.nan)
+    missing = np.ones(len(a_vals), dtype=bool)
+    by_len: dict[int, list[int]] = {}
+    for i, (u, w) in enumerate(zip(a_vals, b_vals)):
+        if u is not None and w is not None and u.shape[0] == w.shape[0]:
+            by_len.setdefault(u.shape[0], []).append(i)
+    for idx in by_len.values():
+        a = np.stack([a_vals[i] for i in idx])
+        b = np.stack([b_vals[i] for i in idx])
         with np.errstate(all="ignore"):
-            c = np.einsum("ij,ij->i", a, b) / (
+            out[idx] = np.einsum("ij,ij->i", a, b) / (
                 np.sqrt(np.einsum("ij,ij->i", a, a))
                 * np.sqrt(np.einsum("ij,ij->i", b, b))
             )
-        out[fast] = c
-        missing[fast] = False
-    for i in range(n):
-        if (
-            missing[i]
-            and a_vals[i] is not None
-            and b_vals[i] is not None
-            and a_vals[i].shape[0] == b_vals[i].shape[0]
-        ):
-            u, w = a_vals[i], b_vals[i]
-            with np.errstate(all="ignore"):
-                out[i] = (u @ w) / (np.sqrt(u @ u) * np.sqrt(w @ w))
-            missing[i] = False
+        missing[idx] = False
     return pd.Series(pd.arrays.FloatingArray(out, missing))
 
 

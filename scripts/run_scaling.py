@@ -64,8 +64,7 @@ os.environ["SPARK_GRAFT_CONF"] = json.dumps({{
 spark = get_spark(master=master, shuffle_partitions=int(shuffle))
 spark.sparkContext.setLogLevel("ERROR")
 cfg = BuildConfig(num_buckets=64, id_buckets=64, max_postings_per_segment=100_000,
-                  segment_chunks=1,
-                  term_hash_shuffle=bool(int(os.environ.get("SCALING_TERM_HASH", "0"))))
+                  segment_chunks=1)
 # build twice in one JVM: build 1 = cold (pays JIT/codegen warmup),
 # build 2 = warm steady state — the number a long-lived cluster sees
 walls = []
@@ -100,7 +99,6 @@ payload = {{
     "stage_walls": stage_walls,
     "results": sorted([r["qid"], r["rank"], r["doc_id"], round(r["score"], 9)] for r in res),
     "doc_map_sha": shas[1],
-    "term_hash_shuffle": cfg.term_hash_shuffle,
 }}
 spark.stop()  # flushes the event log
 shuffle_write = 0

@@ -288,3 +288,34 @@ def test_add_to_csv_repeat_and_over_budget(spark, index, monkeypatch):
     assert len(user.schema.fields) == 2
     monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
     assert rows() == want
+
+
+def test_add_to_csv_nested_and_typed_columns(spark, index, monkeypatch):
+    """User columns of every kind Arrow must carry (map, array, struct,
+    decimal, timestamp, date, binary, an all-null double) come back from
+    the driver-route table exactly as the distributed plan returns them."""
+    import datetime
+    from decimal import Decimal
+
+    user = spark.createDataFrame(
+        [
+            ("r1", ENTITY_NAMES[0], {"a": 1}, [1, 2], ("x", 1.5), Decimal("12.34"),
+             datetime.datetime(2024, 1, 2, 3, 4, 5), datetime.date(2024, 1, 2),
+             bytearray(b"\x00\x01"), None),
+            ("r2", "qqqq zzzz", {}, [], ("y", None), None, None, None, None, None),
+            ("r3", None, None, None, None, Decimal("-0.01"),
+             datetime.datetime(1999, 12, 31), datetime.date(1970, 1, 1),
+             bytearray(b""), None),
+        ],
+        "row_id string, org_name string, m map<string,int>, arr array<int>, "
+        "st struct<s:string,d:double>, dec decimal(10,2), ts timestamp, "
+        "dt date, bin binary, nd double",
+    )
+
+    def rows():
+        return sorted(tuple(r) for r in add_to_csv(spark, index, user, "org_name").collect())
+
+    got = rows()
+    assert [r[-2] is None for r in got] == [False, True, True]
+    monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
+    assert got == rows()

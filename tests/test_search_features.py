@@ -561,3 +561,29 @@ class TestMoreLikeThis:
             (url_of[d], i + 1, int(np.floor(s * 1e4 + 0.5)))
             for i, (d, s) in enumerate(want)
         ]
+
+
+class _OverDriverBudget:
+    """Re-runs the inherited tests with a 1-posting driver budget, so the
+    match-set and first-hit decodes (and the top-k scoring) take the
+    executor route; the inherited names keep running the driver route."""
+
+    @pytest.fixture(autouse=True)
+    def _over_budget(self, monkeypatch):
+        monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
+
+
+class TestFacetsOverBudget(_OverDriverBudget, TestFacets):
+    pass
+
+
+class TestSignificantTermsOverBudget(_OverDriverBudget, TestSignificantTerms):
+    pass
+
+
+class TestHighlightOverBudget(_OverDriverBudget, TestHighlight):
+    pass
+
+
+class TestSearchAfterOverBudget(_OverDriverBudget, TestSearchAfter):
+    pass

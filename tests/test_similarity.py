@@ -100,3 +100,28 @@ def test_ivf_persisted_index(spark, emb, brute_top, tmp_path_factory):
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "centroid" in plan
+
+
+def test_cos_pair_is_batch_independent():
+    """A pair's cosine is bit-identical whether or not its length is the
+    batch's modal length; null and ragged pairs are NULL."""
+    import pandas as pd
+
+    from find_that_charity_spark.operators.similarity import cos_pair_udf
+
+    rng = np.random.default_rng(7)
+    u, w = rng.standard_normal(61), rng.standard_normal(61)
+    modal = [rng.standard_normal(64) for _ in range(5)]
+    as_modal = cos_pair_udf.func(
+        pd.Series([u] + [rng.standard_normal(61) for _ in range(5)]),
+        pd.Series([w] + [rng.standard_normal(61) for _ in range(5)]),
+    )
+    as_minority = cos_pair_udf.func(
+        pd.Series(modal + [u, None, np.ones(3)]),
+        pd.Series(modal + [w, np.ones(3), np.ones(4)]),
+    )
+    assert as_modal[0] == as_minority[5]
+    assert as_modal[0] == pytest.approx(
+        (u @ w) / (np.linalg.norm(u) * np.linalg.norm(w)), rel=1e-12
+    )
+    assert as_minority.isna().tolist() == [False] * 6 + [True, True]

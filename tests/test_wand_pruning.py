@@ -62,9 +62,9 @@ def skewed():
 
 
 def _decode_all(cursor, avgdl):
-    from find_that_charity_spark.operators.query import _decode_cursor_full
+    from find_that_charity_spark.operators.query import _decode_cursor_range
 
-    return _decode_cursor_full(cursor, avgdl)
+    return _decode_cursor_range(cursor, avgdl)
 
 
 def test_bmw_skips_blocks_and_stays_exact(skewed):
