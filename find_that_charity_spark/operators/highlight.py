@@ -13,7 +13,8 @@ The ES highlight analog, split exactly the way Lucene splits it:
   reduced to one ``min(pos0)`` row per result doc before the collect;
 - **snippet** re-analyzes the STORED field of only the k result rows (the
   plain-highlighter model): one pushed IN-list probe of the corpus, then
-  the ASCII tokenization (``ASCII_TOKEN_PATTERN`` on lowered text) and
+  ``analyze`` — the tokenization the postings' positions count, so
+  first_hit indexes the same token stream on any text, ASCII or not — and
   the window slice on the driver, for both routes — never a scan-wide
   tokenize.
 
@@ -35,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from find_that_charity_spark.functions.analyzer import ASCII_TOKEN_PATTERN, analyze
+from find_that_charity_spark.functions.analyzer import analyze
 from find_that_charity_spark.operators import query
 from find_that_charity_spark.operators.query import (
     _decode_cursor_positions,
@@ -143,11 +144,10 @@ def highlight_topk(
 
     # snippets: the k stored rows, re-analyzed and sliced at first_hit
     corpus_ids = sorted({url_to_id(r["url"]) for r in top})
-    ascii_re = re.compile(ASCII_TOKEN_PATTERN)
     toks_of = {
-        int(r["corpus_id"]): ascii_re.findall((r[text_col] or "").lower())
-        for r in corpus.where(F.col(id_col).isin(corpus_ids))
-        .select(F.col(id_col).cast("long").alias("corpus_id"), text_col)
+        int(r[0]): analyze(r[1])
+        for r in corpus.where(query.in_list(id_col, corpus_ids))
+        .select(id_col, text_col)
         .collect()
     }
     out_rows = []

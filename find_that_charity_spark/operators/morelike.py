@@ -29,7 +29,12 @@ from pyspark.sql import functions as F
 
 from find_that_charity_spark.functions.analyzer import analyze
 from find_that_charity_spark.functions.bm25 import idf_np
-from find_that_charity_spark.operators.query import cached_parquet, load_stats, run_queries
+from find_that_charity_spark.operators.query import (
+    cached_parquet,
+    in_list,
+    load_stats,
+    run_queries,
+)
 from find_that_charity_spark.plans.checkpoint import check_format
 
 
@@ -80,8 +85,7 @@ def more_like_this(
             sorted(
                 int(r["doc_id"])
                 for r in cached_parquet(spark, f"{index_dir}/docs")
-                .where(F.col("url").isin(sorted(exclude_urls)))
-                .select("doc_id")
+                .where(in_list("url", sorted(exclude_urls)))
                 .collect()
             ),
             dtype=np.int64,

@@ -641,15 +641,17 @@ def _local_mtime_key(path: str) -> tuple | None:
 # reader's file listing is frozen at creation, hence the same mtime
 # signature the stats/tombstone caches use invalidates it whenever any
 # writer (refresh, vacuum, compaction) touches the directory. Remote
-# schemes (no cheap freshness signal) skip the cache. Keyed per
-# SparkContext application so a stopped session's plans are never reused.
-_PARQUET_READER_CACHE: dict[str, object] = {"app": None, "readers": {}}
+# schemes (no cheap freshness signal) skip the cache. Keyed on the
+# driver's SparkContext object, which a new session replaces, so a stopped
+# session's plans are never reused (the application id would cost two py4j
+# round trips per call to read).
+_PARQUET_READER_CACHE: dict[str, object] = {"sc": None, "readers": {}}
 
 
 def cached_parquet(spark: SparkSession, path: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    if _PARQUET_READER_CACHE["app"] != app:
-        _PARQUET_READER_CACHE["app"] = app
+    sc = spark.sparkContext
+    if _PARQUET_READER_CACHE["sc"] is not sc:
+        _PARQUET_READER_CACHE["sc"] = sc
         _PARQUET_READER_CACHE["readers"] = {}
     sig = _local_mtime_key(path)
     if sig is None:
@@ -689,12 +691,8 @@ def probe_dictionary(
             known, missing = hit[1], hit[2]
     todo = sorted({t for t in terms if t not in known and t not in missing})
     if todo:
-        rows = (
-            cached_parquet(spark, f"{index_dir}/dictionary")
-            .where(in_list("term", todo))
-            .select("term", "df", "bucket")
-            .collect()
-        )
+        dictionary = cached_parquet(spark, f"{index_dir}/dictionary")
+        rows = dictionary.where(in_list("term", todo)).collect()
         got = {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
         known.update(got)
         missing.update(t for t in todo if t not in got)
@@ -978,17 +976,11 @@ def _fuzzy_candidates(spark: SparkSession, index_dir: str, qterms: list[str]) ->
             in_list("key", sorted({key for t in qterms for key in deletion_keys(t)}))
         )
     except AnalysisException:  # pre-fuzzy_keys index: no such table
-        from functools import reduce
-
-        conds = [
-            (F.abs(F.length("term") - len(t)) <= 1)
-            & (F.levenshtein(F.col("term"), F.lit(t)) <= 1)
+        cand = cached_parquet(spark, f"{index_dir}/dictionary").where(" OR ".join(
+            f"(abs(length(term) - {len(t)}) <= 1 AND levenshtein(term, {sql_string(t)}) <= 1)"
             for t in qterms
-        ]
-        cand = cached_parquet(spark, f"{index_dir}/dictionary").where(
-            reduce(lambda a, b: a | b, conds)
-        )
-    return [r["term"] for r in cand.select("term").distinct().collect()]
+        ))
+    return sorted({r["term"] for r in cand.collect()})
 
 
 def _analyze_batch_driver(
@@ -1050,34 +1042,32 @@ def take_wide(df: DataFrame, n: int) -> list:
                 spark.conf.set(key, prev)
 
 
-def in_list(col: str, values) -> "F.Column":
-    """``col IN (values)`` as ONE py4j round trip.
+def sql_string(v: str) -> str:
+    """``v`` as a Spark SQL string literal: quoted, with backslashes and
+    quotes escaped, so no value can end the literal early."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    ``Column.isin`` builds one Java literal per element (~0.7 ms of py4j
-    each, measured — 0.2 s of pure driver time for a 300-id list); above
-    a small size the same In expression is built by the SQL parser from
-    one string instead. Identical semantics and identical parquet
-    pushdown (it IS the same ``In`` Catalyst node). Values must be
-    strings or integers (Python or numpy; ``bool`` and ``float`` raise
-    ``TypeError`` rather than being truncated); strings are
-    quote-escaped and the column name backtick-quoted."""
-    vals = []
+
+def in_list(col: str, values) -> str:
+    """``col IN (values)`` as SQL text for ``DataFrame.where``, which hands
+    the string to the JVM in ONE py4j round trip (``Column.isin`` sends
+    one per value, ~0.7 ms each). The parsed predicate is the same ``In``
+    Catalyst node, with the same parquet pushdown. Values must be strings
+    or integers (Python or numpy; ``bool`` and ``float`` raise
+    ``TypeError`` rather than being truncated); strings are quoted with
+    ``sql_string`` and the column name is backtick-quoted. No values give
+    ``false``."""
+    parts = []
     for v in values:
         if isinstance(v, str):
-            vals.append(v)
+            parts.append(sql_string(v))
         elif isinstance(v, (int, np.integer)) and not isinstance(v, bool):
-            vals.append(int(v))
+            parts.append(str(int(v)))
         else:
             raise TypeError(f"in_list values must be str or int, got {type(v).__name__}")
-    ident = "`" + col.replace("`", "``") + "`"
-    if len(vals) <= 32:
-        return F.col(ident).isin(vals)
-    parts = [
-        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        if isinstance(v, str) else str(v)
-        for v in vals
-    ]
-    return F.expr(f"{ident} IN ({', '.join(parts)})")
+    if not parts:
+        return "false"
+    return f"`{col.replace('`', '``')}` IN ({', '.join(parts)})"
 
 
 # the driver's query bound: a batch of at most this many queries is parsed
@@ -1109,15 +1099,18 @@ def pruned_segments(
     """The segment rows of ``by_term``'s terms ({term: (df, bucket)}): a
     bucket partition filter (D3) and a term IN-list, both pushed to the
     parquet scan, and given ``doc_range`` = (lo, hi), inclusive, only the
-    rows whose doc range overlaps it. Every postings fetch starts here,
-    collected on the driver or decoded in executors."""
-    rel = segments.where(
-        in_list("bucket", sorted({b for _, b in by_term.values()}))
-    ).where(in_list("term", sorted(by_term)))
+    rows whose doc range overlaps it. The conjunction is one SQL predicate
+    and one ``where`` call, so building the relation is one py4j round
+    trip. Every postings fetch starts here, collected on the driver or
+    decoded in executors."""
+    pred = (
+        f"{in_list('bucket', sorted({b for _, b in by_term.values()}))}"
+        f" AND {in_list('term', sorted(by_term))}"
+    )
     if doc_range is not None:
         lo, hi = doc_range
-        rel = rel.where((F.col("max_doc") >= int(lo)) & (F.col("min_doc") <= int(hi)))
-    return rel
+        pred += f" AND max_doc >= {int(lo)} AND min_doc <= {int(hi)}"
+    return segments.where(pred)
 
 
 def _score_driver(
@@ -1151,12 +1144,9 @@ def _score_driver(
     default the mtime-checked ``cached_parquet`` one."""
     segs = segments if segments is not None else cached_parquet(spark, f"{index_dir}/segments")
     terms = {r[6]: (r[7], r[8]) for r in matched_rows}
-    seg_rows = (
-        pruned_segments(segs, terms)
-        .select("term", "min_doc", "max_doc", "has_positions", "postings", "blockmax")
-        .collect()
-        if terms else []
-    )
+    # collected as it is: a projection would cost more round trips than
+    # the segment rows' few extra scalar columns cost to ship
+    seg_rows = pruned_segments(segs, terms).collect() if terms else []
     by_term: dict[str, list] = {}
     for sr in seg_rows:
         by_term.setdefault(sr["term"], []).append(sr)
@@ -1212,10 +1202,7 @@ def _score_driver(
         ids = sorted({int(d) for d in res["doc_id"]})
         docs = cached_parquet(spark, f"{index_dir}/docs")
         url_of = {
-            int(r["doc_id"]): r["url"]
-            for r in docs.where(in_list("doc_id", ids))
-            .select("doc_id", "url")
-            .collect()
+            int(r["doc_id"]): r["url"] for r in docs.where(in_list("doc_id", ids)).collect()
         }
         # inner-join semantics, exactly like docs.join(broadcast(results)):
         # a result id absent from the docs table drops its row

@@ -14,7 +14,6 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -28,19 +27,27 @@ from find_that_charity_spark.operators.query import cached_parquet, run_queries
 RECON_TYPE = "web_page"
 
 # properties the corpus can filter on (Recon API v0.2 `properties`): pid ->
-# Column predicate builder over the docs table. Unknown pids are ignored,
-# as OpenRefine services conventionally do.
+# SQL predicate builder over the docs table, the value quoted as a string
+# literal. Unknown pids are ignored, as OpenRefine services conventionally do.
 _RECON_PROPS = {
-    "lang": lambda v: F.col("lang") == str(v),
-    "host": lambda v: F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1) == str(v),
+    "lang": lambda v: f"lang = {query.sql_string(str(v))}",
+    "host": lambda v: (
+        f"regexp_extract(url, {query.sql_string(r'^[a-z]+://([^/]+)')}, 1)"
+        f" = {query.sql_string(str(v))}"
+    ),
 }
 
 
-def _filter_exclusions(spark: SparkSession, index_dir: str, props) -> "list[int]":
-    """Doc ids failing the property constraints — ES filter-context
-    semantics: scoring stats are untouched, the docs just can't appear.
-    Rides run_queries' exclusion broadcast (same machinery as tombstones
-    and NOT terms), so filtered top-k stays exact.
+def _filter_exclusions(spark: SparkSession, index_dir: str, props) -> np.ndarray:
+    """Doc ids failing the property constraints, as a sorted int64 array
+    — ES filter-context semantics: scoring stats are untouched, the docs
+    just can't appear. A doc whose property is NULL fails the constraint,
+    as in an ES term filter. Rides the scoring tails' exclusion sets
+    (the tombstone machinery), so filtered top-k stays exact.
+
+    One docs scan: the conjunction of the constraints is one SQL predicate
+    (``(<pred>) IS NOT TRUE`` selects the failing docs, NULLs included)
+    and the ids come back through Arrow, not as ``Row`` objects.
 
     The disallowed set is collected driver-side: right for the selective
     filters the Recon API sends over this corpus, while a filter that
@@ -53,17 +60,14 @@ def _filter_exclusions(spark: SparkSession, index_dir: str, props) -> "list[int]
         if isinstance(p, dict) and p.get("pid") in _RECON_PROPS
     ]
     if not conds:
-        return []
-    from functools import reduce
-
-    allowed = reduce(lambda a, b: a & b, conds)
-    return sorted(
-        r["doc_id"]
-        for r in cached_parquet(spark, f"{index_dir}/docs")
-        .where(~allowed)
+        return np.empty(0, dtype=np.int64)
+    barred = (
+        cached_parquet(spark, f"{index_dir}/docs")
+        .where(f"({' AND '.join(conds)}) IS NOT TRUE")
         .select("doc_id")
-        .collect()
+        .toArrow()
     )
+    return np.sort(barred.column("doc_id").to_numpy().astype(np.int64, copy=False))
 
 
 def _driver_pass(
@@ -115,7 +119,8 @@ def reconcile(
     RECON_TYPE matches nothing; ``properties`` compile to metadata
     exclusions applied at scoring (filter context — scores unchanged,
     top-k exact over the allowed set), one exclusion set per constraint
-    signature.
+    signature (``_filter_exclusions``; a doc whose property is NULL is
+    excluded).
 
     Spark jobs per batch: on the driver route (at most
     ``DRIVER_MAX_QUERIES`` queries and the batch's postings within
@@ -145,7 +150,7 @@ def reconcile(
              "k": int(batch[q].get("limit", 10)), "mode": "recon"}
             for q in qids
         ]
-        kept.append((qrows, np.array(excl, dtype=np.int64) if excl else None))
+        kept.append((qrows, excl if len(excl) else None))
 
     res = _driver_pass(
         spark, index_dir, [r for qrows, _ in kept for r in qrows],
@@ -249,7 +254,8 @@ def suggest_spelling(
     Plan (the D7+ fuzzy machinery, suggestion polarity): the term's
     deletion neighborhood (|t|+1 keys) is pushed as an IN-list into the
     build-time ``fuzzy_keys`` table — an equi-join probe, never a
-    vocabulary-wide levenshtein scan (SymSpell [public]); the key-matched
+    vocabulary-wide levenshtein scan (SymSpell [public]), the same probe
+    fuzzy queries make (``query._fuzzy_candidates``); the key-matched
     candidate set (tiny) is verified with an exact edit-distance check
     driver-side and the survivors' df comes from one pushed IN-list
     dictionary probe. At web scale both probes touch O(len(term)) keys /
@@ -258,45 +264,21 @@ def suggest_spelling(
     Output: (suggestion string, df bigint, distance int).
     """
     from find_that_charity_spark.functions.analyzer import analyze
-    from find_that_charity_spark.functions.fuzzy import deletion_keys, within_edit1
+    from find_that_charity_spark.functions.fuzzy import within_edit1
 
     out_schema = "suggestion string, df bigint, distance int"
     toks = analyze(term)
     if len(toks) != 1:
         return spark.createDataFrame([], out_schema)
     t = toks[0]
-    keys = deletion_keys(t)
-    try:
-        cands = sorted(
-            {
-                r["term"]
-                for r in cached_parquet(spark, f"{index_dir}/fuzzy_keys")
-                .where(F.col("key").isin(keys))
-                .select("term")
-                .collect()
-            }
-        )
-    except AnalysisException:
-        # pre-fuzzy_keys index: levenshtein-filtered scan (the filter runs
-        # JVM-side; only the tiny candidate set reaches the driver — never
-        # collect the whole dictionary)
-        cands = sorted(
-            r["term"]
-            for r in cached_parquet(spark, f"{index_dir}/dictionary")
-            .where(
-                (F.abs(F.length("term") - F.lit(len(t))) <= 1)
-                & (F.levenshtein(F.col("term"), F.lit(t)) <= 1)
-            )
-            .select("term")
-            .collect()
-        )
+    cands = query._fuzzy_candidates(spark, index_dir, [t])
     # shared key only bounds distance at 2 — exact verify, input excluded
     verified = [c for c in cands if c != t and within_edit1(c, t)]
     if not verified:
         return spark.createDataFrame([], out_schema)
     return (
         cached_parquet(spark, f"{index_dir}/dictionary")
-        .where(F.col("term").isin(verified))
+        .where(query.in_list("term", verified))
         .select(
             F.col("term").alias("suggestion"),
             F.col("df").cast("bigint").alias("df"),

@@ -163,7 +163,12 @@ def test_reconcile_type_and_properties(spark, index):
 
 @pytest.fixture(scope="module")
 def corpus(spark, index):
-    """(doc_ids, texts, lang_of) of the live corpus, doc_id order."""
+    return _live_corpus(spark, index)
+
+
+def _live_corpus(spark, index):
+    """(doc_ids, texts, lang_of, url_of) of the live corpus of an index
+    built from ``fx/web_pages.parquet`` beside it, doc_id order."""
     import os
 
     docs = spark.read.parquet(f"{index}/docs").select("doc_id", "url", "lang").toPandas()
@@ -319,3 +324,74 @@ def test_add_to_csv_nested_and_typed_columns(spark, index, monkeypatch):
     assert [r[-2] is None for r in got] == [False, True, True]
     monkeypatch.setenv("FTC_DRIVER_SCORE_MAX_POSTINGS", "1")
     assert got == rows()
+
+
+# lang values a filter must match exactly, quotes and backslashes included,
+# and one that would widen the filter were it spliced into the SQL
+_ODD_LANGS = ["x'y", "a\\b", "en' OR '1'='1", "\\'"]
+
+
+@pytest.fixture(scope="module")
+def odd_lang_index(spark, tmp_path_factory):
+    """An index whose docs carry NULL and quote/backslash lang values:
+    half the docs of ENTITY_NAMES[0] have a NULL lang."""
+    from find_that_charity_spark.sources.corpus import WEB_PAGES_SCHEMA
+    from find_that_charity_spark.sources.synth import synth_web_pages
+
+    root = tmp_path_factory.mktemp("recon_lang")
+    fx, idx = str(root / "fx"), str(root / "idx")
+    pages = synth_web_pages(200)
+    entity = pages.index[pages["text"].str.contains(ENTITY_NAMES[0])]
+    pages.loc[entity[::2], "lang"] = None
+    others = pages.index.difference(entity)
+    for i, v in enumerate(_ODD_LANGS):
+        pages.loc[others[i::10], "lang"] = v
+    spark.createDataFrame(pages, schema=WEB_PAGES_SCHEMA).write.parquet(
+        f"{fx}/web_pages.parquet"
+    )
+    build_index(spark, f"{fx}/web_pages.parquet", idx,
+                BuildConfig(num_buckets=4, id_buckets=4, segment_chunks=1))
+    return idx, _live_corpus(spark, idx)
+
+
+def test_null_property_fails_the_filter(spark, odd_lang_index):
+    """A doc whose lang is NULL fails a lang filter (ES term-filter
+    semantics): filtered results are the oracle's top-k over the en docs."""
+    from find_that_charity_spark.functions.analyzer import analyze, analyze_name
+    from find_that_charity_spark.operators.oracle import brute_force_topk
+
+    idx, (ids, texts, lang_of, url_of) = odd_lang_index
+    null_urls = {url_of[d] for d in ids if lang_of[d] is None}
+    q = {"query": ENTITY_NAMES[0], "limit": 10}
+    plain = reconcile(spark, idx, {"q": q})["q"]["result"]
+    assert {h["id"] for h in plain} & null_urls, "NULL-lang docs must rank unfiltered"
+    q["properties"] = [{"pid": "lang", "v": "en"}]
+    hits = reconcile(spark, idx, {"q": q})["q"]["result"]
+    assert not {h["id"] for h in hits} & null_urls
+    want = brute_force_topk(
+        ids, texts, q["query"], q["limit"], analyzer=analyze,
+        query_analyzer=analyze_name, include=[d for d in ids if lang_of[d] == "en"],
+    )
+    assert [h["id"] for h in hits] == [url_of[d] for d, _ in want]
+    assert [h["score"] for h in hits] == pytest.approx([s for _, s in want], rel=1e-9)
+
+
+def test_property_values_are_quoted(spark, odd_lang_index):
+    """A property value is a quoted SQL literal, never SQL text: each bars
+    exactly the docs ``F.col("lang") == v`` does not keep, NULLs included."""
+    from pyspark.sql import functions as F
+
+    from find_that_charity_spark.operators.recon import _filter_exclusions
+
+    idx, (ids, _texts, lang_of, _url_of) = odd_lang_index
+    docs = spark.read.parquet(f"{idx}/docs")
+    for v in ["en", *_ODD_LANGS]:
+        got = _filter_exclusions(spark, idx, [{"pid": "lang", "v": v}])
+        want = sorted(
+            r["doc_id"]
+            for r in docs.where(~F.coalesce(F.col("lang") == v, F.lit(False)))
+            .select("doc_id").collect()
+        )
+        assert got.dtype == "int64" and got.tolist() == want, v
+        assert 0 < len(got) < len(ids), v  # some docs carry v, some do not
+    assert len(_filter_exclusions(spark, idx, [{"pid": "host", "v": "a'b"}])) == len(ids)

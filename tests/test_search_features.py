@@ -341,6 +341,48 @@ class TestHighlight:
             assert r["first_hit"] == fh0 + 1, "postings-derived hit diverges"
             assert r["snippet"] == " ".join(toks[fh0 : fh0 + 5])
 
+    def test_non_ascii_snippet(self, spark, tmp_path):
+        """Snippets slice the same ``analyze`` token stream the postings'
+        positions count, so accented and non-Latin words before the hit
+        do not shift the window."""
+        import datetime
+
+        import pandas as pd
+
+        from find_that_charity_spark.operators.highlight import highlight_topk
+        from find_that_charity_spark.sources.corpus import WEB_PAGES_SCHEMA
+
+        texts = [
+            "Société Générale acme trust fund annual report",
+            "Ærø Ünïon Москва acme relief fund",
+            "plain acme charity fund",
+            "naïve café society without the term",
+        ]
+        pages = pd.DataFrame({
+            "url": [f"https://h/p/{i:08d}" for i in range(len(texts))],
+            "warc_ts": [datetime.datetime(2024, 1, 1)] * len(texts),
+            "html": [t.encode("utf-8") for t in texts],
+            "text": texts,
+            "lang": ["fr", "da", "en", "en"],
+        })
+        src, idx = str(tmp_path / "web_pages.parquet"), str(tmp_path / "idx")
+        spark.createDataFrame(pages, schema=WEB_PAGES_SCHEMA).write.parquet(src)
+        build_index(spark, src, idx, BuildConfig(
+            num_buckets=2, id_buckets=2, segment_chunks=1, positions=True,
+        ))
+        cdf = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        )
+        out = {
+            int(r["doc_id"]): (r["first_hit"], r["snippet"])
+            for r in highlight_topk(spark, idx, cdf, "acme", k=10, window=3).collect()
+        }
+        assert out == {
+            0: (3, "acme trust fund"),
+            1: (4, "acme relief fund"),
+            2: (2, "acme charity fund"),
+        }
+
 
 class TestPrefixQuery:
     def test_scoring_boolean_rewrite(self, spark, sindex, corpus):

@@ -159,3 +159,63 @@ def test_over_budget_search_is_one_job_and_same_answer(spark, index, monkeypatch
     assert [(r["rank"], r["doc_id"]) for r in sorted(rows, key=lambda r: r["rank"])] == [
         (r, d) for r, d, _ in want[("charitable trust", "freetext")]
     ]
+
+
+class _RoundTrips:
+    """Counts the py4j commands the driver sends to the JVM: each call of
+    ``ClientServerConnection.send_command`` is one Python/JVM round trip.
+    Memory-release commands are not counted: py4j sends one when Python
+    frees a JVM object handle, so how many fall inside a call depends on
+    when the garbage collector ran, not on the call."""
+
+    def __init__(self, monkeypatch):
+        from py4j.clientserver import ClientServerConnection
+
+        self.n = 0
+        orig = ClientServerConnection.send_command
+
+        def send_command(conn, command, *a, **k):
+            if not command.startswith("m\n"):
+                self.n += 1
+            return orig(conn, command, *a, **k)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", send_command)
+
+
+def _recon_batch():
+    from find_that_charity_spark.sources.synth import ENTITY_NAMES
+
+    batch = {}
+    for i in range(10):
+        q = {"query": ENTITY_NAMES[i % len(ENTITY_NAMES)], "limit": 10, "type": "web_page"}
+        if i % 2:
+            q["properties"] = [{"pid": "lang", "v": "en"}]
+        batch[f"q{i}"] = q
+    return batch
+
+
+def test_warm_calls_make_few_jvm_round_trips(spark, index, monkeypatch):
+    """A warm driver-route search and a warm 10-query reconcile cross the
+    Python/JVM boundary a handful of times per Spark probe, not once per
+    IN-list value or chained transformation: each probe is one
+    ``where(<SQL predicate>)`` on a cached reader and then its action.
+    When probes were built from ``Column`` expressions the same two calls
+    made 110 (search) and 270 (reconcile) round trips on this index; each
+    bound is a fifth of that. The counts depend on the installed pyspark
+    (4.1.2): another version may send more or fewer commands per action."""
+    from find_that_charity_spark.operators.recon import reconcile
+
+    s = IndexSearcher(spark, index)
+    batch = _recon_batch()
+    want_search = s.search("charitable trust", k=10)  # warm
+    want_recon = reconcile(spark, index, batch)
+    trips = _RoundTrips(monkeypatch)
+    got = s.search("charitable trust", k=10)
+    n_search, trips.n = trips.n, 0
+    got_recon = reconcile(spark, index, batch)
+    n_recon = trips.n
+    monkeypatch.undo()
+    s.close()
+    assert got == want_search and got_recon == want_recon
+    assert n_search <= 110 // 5, n_search
+    assert n_recon <= 270 // 5, n_recon
