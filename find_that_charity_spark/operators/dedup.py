@@ -442,12 +442,6 @@ _AUTO_SIGNATURE_THRESHOLD = 5_000
 _DRIVER_PAIRS_THRESHOLD = 2_000
 
 
-def _resolve_signature_impl(
-    docs: DataFrame, id_col: str, signature_impl: str, large: str
-) -> str:
-    return _resolve_signature_impl_n(docs, id_col, signature_impl, large)[0]
-
-
 def _resolve_signature_impl_n(
     docs: DataFrame, id_col: str, signature_impl: str, large: str
 ) -> tuple[str, int | None]:

@@ -80,7 +80,10 @@ def _real_audio_feature(data: bytes, dim: int) -> np.ndarray:
 
     import soundfile
 
-    samples, rate = soundfile.read(io.BytesIO(data), dtype="float32")
+    try:
+        samples, rate = soundfile.read(io.BytesIO(data), dtype="float32")
+    except RuntimeError as e:  # LibsndfileError: the payload is not audio
+        raise ValueError(str(e)) from e
     if samples.ndim > 1:
         samples = samples.mean(axis=1)
     out = np.zeros(dim, dtype=np.float32)
@@ -240,6 +243,14 @@ def _fake_feature(payload: bytes, dim: int) -> np.ndarray:
     return out
 
 
+# what a decoder raises on a malformed payload: the numpy BMP/WAV decoders
+# raise ValueError, truncated input included; PIL raises OSError
+# (UnidentifiedImageError, "image file is truncated") or ValueError; the
+# soundfile kernel re-raises soundfile's error as ValueError. Anything
+# else is a fault in the kernel and propagates.
+_DECODE_ERRORS = (ValueError, OSError)
+
+
 def _feature_for(
     data: bytes, kind: str, dim: int, deterministic_fake: bool, probe=None
 ) -> np.ndarray:
@@ -252,7 +263,7 @@ def _feature_for(
     if decoder is not None:
         try:
             return np.asarray(decoder(data, dim), dtype=np.float32)
-        except Exception:
+        except _DECODE_ERRORS:
             if not deterministic_fake:
                 raise
     elif not deterministic_fake:

@@ -70,37 +70,6 @@ def _filter_exclusions(spark: SparkSession, index_dir: str, props) -> np.ndarray
     return np.sort(barred.column("doc_id").to_numpy().astype(np.int64, copy=False))
 
 
-def _driver_pass(
-    spark: SparkSession,
-    index_dir: str,
-    qrows: list[dict],
-    exclude_by_qid: "dict[str, np.ndarray] | None" = None,
-) -> "pd.DataFrame | None":
-    """Score a small batch in ONE driver-route pass, with no Spark relation
-    built or collected: one parse (a dictionary probe job only for terms
-    the driver has not resolved before), one pushed segments fetch for the
-    union of the batch's terms and buckets, one ``_score_driver`` call that
-    scores every qid under its own exclusion set, and one pushed url probe
-    for the union of the result ids.
-
-    Returns the pandas (qid, rank, doc_id, url, score) frame, or None when
-    the batch is over ``run_queries``' driver bounds (more than
-    ``DRIVER_MAX_QUERIES`` queries, or over ``_fits_driver_budget``): the
-    caller then takes the distributed route. Query functions are looked
-    up through the module so a wrapped (traced) one is the one called."""
-    if len(qrows) > query.DRIVER_MAX_QUERIES:
-        return None
-    n_docs, avgdl = query.load_stats(spark, index_dir)
-    tomb = query.read_tombstones(spark, index_dir)
-    matched = query._analyze_batch_driver(spark, index_dir, qrows)
-    if not query._fits_driver_budget(sum(r[7] for r in matched)):
-        return None
-    return query._score_driver(
-        spark, index_dir, matched, n_docs, avgdl, True, tomb, None,
-        join_urls=True, exclude_by_qid=exclude_by_qid,
-    )
-
-
 def reconcile(
     spark: SparkSession, index_dir: str, batch: dict[str, dict[str, Any]]
 ) -> dict[str, dict[str, Any]]:
@@ -122,13 +91,14 @@ def reconcile(
     signature (``_filter_exclusions``; a doc whose property is NULL is
     excluded).
 
-    Spark jobs per batch: on the driver route (at most
-    ``DRIVER_MAX_QUERIES`` queries and the batch's postings within
-    ``_fits_driver_budget``, decided once for the whole batch) one docs
-    scan per FILTERED signature, plus one postings fetch and one url
-    probe for the whole batch, plus one dictionary probe only when the
-    batch has terms the driver has not seen before. Over either bound each signature runs ``run_queries``
-    on its own (the distributed route)."""
+    The whole batch is one ``IndexSearcher.search_batch`` call on a
+    handle for the index's current version, each qid under its
+    signature's exclusion set. Spark jobs per batch, with the batch's
+    postings within ``_fits_driver_budget``: one docs scan per FILTERED
+    signature, plus one postings fetch and one url probe for the whole
+    batch, plus one dictionary probe only when the batch has terms the
+    driver has not resolved before. Over the budget each exclusion set is
+    one distributed plan."""
     import json
 
     groups: dict[str, list[str]] = {}
@@ -152,29 +122,15 @@ def reconcile(
         ]
         kept.append((qrows, excl if len(excl) else None))
 
-    res = _driver_pass(
-        spark, index_dir, [r for qrows, _ in kept for r in qrows],
-        {r["qid"]: excl for qrows, excl in kept if excl is not None for r in qrows},
+    res = query.IndexSearcher(spark, index_dir, preload_terms=0).search_batch(
+        [r for qrows, _ in kept for r in qrows],
+        join_urls=True,
+        exclude_by_qid={
+            r["qid"]: excl for qrows, excl in kept if excl is not None for r in qrows
+        },
     )
-    if res is not None:
-        hits = list(res[["qid", "rank", "url", "score"]].itertuples(index=False, name=None))
-    else:
-        hits = []
-        for qrows, excl in kept:
-            qdf = spark.createDataFrame(
-                [(r["qid"], r["text"], r["k"], r["mode"]) for r in qrows],
-                "qid string, text string, k int, mode string",
-            )
-            hits.extend(
-                (r["qid"], r["rank"], r["url"], r["score"])
-                for r in run_queries(
-                    spark, index_dir, qdf, join_urls=True, exclude_doc_ids=excl,
-                    prefetched_qrows=qrows if len(qrows) <= query.DRIVER_MAX_QUERIES else None,
-                ).collect()
-            )
-
     by_q: dict[str, list] = {qid: [] for qid in batch}
-    for qid, _rank, url, score in sorted(hits, key=lambda h: (h[0], h[1])):
+    for qid, url, score in zip(res["qid"], res["url"], res["score"]):  # by (qid, rank)
         by_q[qid].append((url, float(score)))
     out: dict[str, dict[str, Any]] = {}
     for qid, cands in by_q.items():
@@ -255,7 +211,8 @@ def suggest_spelling(
     deletion neighborhood (|t|+1 keys) is pushed as an IN-list into the
     build-time ``fuzzy_keys`` table — an equi-join probe, never a
     vocabulary-wide levenshtein scan (SymSpell [public]), the same probe
-    fuzzy queries make (``query._fuzzy_candidates``); the key-matched
+    fuzzy queries make (``query._fuzzy_candidates``, which expands in
+    memory with no job while the dictionary is preloaded); the key-matched
     candidate set (tiny) is verified with an exact edit-distance check
     driver-side and the survivors' df comes from one pushed IN-list
     dictionary probe. At web scale both probes touch O(len(term)) keys /
@@ -302,13 +259,13 @@ def add_to_csv(
     Adds ``match_url`` and ``match_score`` columns (null when no hit).
     The user table keeps its row identity via a deterministic qid.
 
-    Small tables (the interactive add-to-CSV regime) dedup their queries,
-    score them in the same single driver-route pass as ``reconcile``
-    (one postings fetch, one url probe) and join the matches back
-    DRIVER-side — a handful of jobs instead of the shuffle
+    Tables of at most ``DRIVER_MAX_QUERIES`` rows (the interactive
+    add-to-CSV regime) dedup their queries, answer them through the same
+    ``IndexSearcher.search_batch`` call as ``reconcile`` (within the
+    postings budget one postings fetch and one url probe) and join the
+    matches back DRIVER-side — a handful of jobs instead of the shuffle
     (dropDuplicates) + broadcast-join stage fan the distributed plan
-    needs (VERDICT r03 item 8). Large tables, and small ones over the
-    driver postings budget, keep the distributed plan."""
+    needs (VERDICT r03 item 8). Larger tables keep the distributed plan."""
     from find_that_charity_spark.operators.query import take_wide
 
     # a caller that already holds the table driver-side passes the rows
@@ -317,7 +274,6 @@ def add_to_csv(
     # relation costs a ~0.3 s Python-worker job (optimization round 6)
     bound = query.DRIVER_MAX_QUERIES
     probe = prefetched_rows if prefetched_rows is not None else take_wide(user_df, bound + 1)
-    res = None
     if len(probe) <= bound:
         seen: dict[str, None] = {}
         for r in probe:
@@ -330,11 +286,10 @@ def add_to_csv(
         import hashlib
 
         qid_of = {q: hashlib.md5(q.encode("utf-8")).hexdigest() for q in seen}
-        res = _driver_pass(
-            spark, index_dir,
+        res = query.IndexSearcher(spark, index_dir, preload_terms=0).search_batch(
             [{"qid": qid_of[q], "text": q, "k": 1, "mode": "recon"} for q in seen],
+            join_urls=True,
         )
-    if res is not None:
         top = res[res["score"] >= match_threshold]  # k=1: one row per hit qid
         by_qid = {
             q: (u, float(sc)) for q, u, sc in zip(top["qid"], top["url"], top["score"])

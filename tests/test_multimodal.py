@@ -230,3 +230,30 @@ def test_real_branch_end_to_end(spark):
     # and it is NOT the sha fake
     assert out[1] != _fake_feature(_make_bmp(px), 8).tolist()
     assert out[2] != _fake_feature(wav, 8).tolist()
+
+
+def test_only_decode_errors_fall_back_to_the_fake():
+    """A malformed payload falls back to the fake: a truncated BMP makes
+    the numpy decoder raise ValueError. Any other exception from a decoder
+    is a fault in the kernel and propagates, fakes allowed or not."""
+    import numpy as np
+
+    from find_that_charity_spark.operators.multimodal import _fake_feature, _feature_for
+
+    bmp = _make_bmp(np.zeros((4, 5, 3), dtype=np.uint8))
+    truncated = bmp[: len(bmp) - 7]
+    assert (
+        _feature_for(truncated, "image", 8, True).tolist()
+        == _fake_feature(truncated, 8).tolist()
+    )
+    with pytest.raises(ValueError):
+        _feature_for(truncated, "image", 8, False)
+
+    def faulty_probe(kind):
+        def kernel(d, dim):
+            raise TypeError("kernel bug")
+        return kernel
+
+    for fake_ok in (True, False):
+        with pytest.raises(TypeError):
+            _feature_for(bmp, "image", 8, fake_ok, probe=faulty_probe)

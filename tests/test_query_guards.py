@@ -26,8 +26,8 @@ def test_in_list_branches_agree(spark):
     rows = [(i, f"t'{i}\\x") for i in range(60)]
     df = spark.createDataFrame(rows, [col, "s"])
     want = [3, 5, 7]
-    small = [np.int64(3), 5, np.int32(7)]   # isin branch (<= 32 values)
-    large = small + list(range(1000, 1040))  # SQL-string branch
+    small = [np.int64(3), 5, np.int32(7)]   # numpy and Python ints
+    large = small + list(range(1000, 1040))  # a long list, same SQL form
     for vals in (small, large):
         got = sorted(r[0] for r in df.where(in_list(col, vals)).collect())
         assert got == want
@@ -78,8 +78,9 @@ def test_fuzzy_keys_read_error_propagates(spark, index, monkeypatch):
         query.run_queries(spark, index, _fuzzy_batch(spark), localize_threshold=0).collect()
     with pytest.raises(OSError):
         recon.suggest_spelling(spark, index, "charitible")
-    s = query.IndexSearcher(spark, index)
-    s._term_map = None  # an over-pin dictionary: expansion probes fuzzy_keys
+    # a dictionary over the preload bound: expansion probes fuzzy_keys
+    s = query.IndexSearcher(spark, index, preload_terms=0)
+    assert not s._dict.complete
     try:
         with pytest.raises(OSError):
             s.search("charitible", k=5, mode="fuzzy")

@@ -143,15 +143,15 @@ def test_auto_signature_routing(spark, corpus):
     relational path — and either way the OUTPUT is the md5 pair set."""
     from find_that_charity_spark.operators import dedup as D
 
-    assert D._resolve_signature_impl(corpus, "doc_id", "auto", "relational_md5") == "arrow"
+    assert D._resolve_signature_impl_n(corpus, "doc_id", "auto", "relational_md5")[0] == "arrow"
     # a >threshold input routes relational without scanning text
     big = spark.range(D._AUTO_SIGNATURE_THRESHOLD + 10).withColumnRenamed("id", "doc_id")
     assert (
-        D._resolve_signature_impl(big, "doc_id", "auto", "relational_md5")
+        D._resolve_signature_impl_n(big, "doc_id", "auto", "relational_md5")[0]
         == "relational_md5"
     )
     # explicit impls pass through untouched
-    assert D._resolve_signature_impl(corpus, "doc_id", "arrow", "relational_md5") == "arrow"
+    assert D._resolve_signature_impl_n(corpus, "doc_id", "arrow", "relational_md5")[0] == "arrow"
     # default call (auto) == pinned relational output on the same corpus
     auto = minhash_lsh_pairs(corpus).collect()
     rel = minhash_lsh_pairs(corpus, signature_impl="relational_md5").collect()

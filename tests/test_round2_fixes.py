@@ -177,13 +177,15 @@ def test_index_searcher_fuzzy_parity(spark, index):
 
 
 def test_index_searcher_preload_parity(spark, index):
-    """Driver-preloaded term map (small dictionaries) and executor-cached
-    probe (web-scale fallback) must answer identically."""
+    """A complete dictionary record (small dictionaries, preloaded) and a
+    probing one (web-scale fallback) must answer identically."""
     from find_that_charity_spark.operators.query import IndexSearcher
 
-    s_pre = IndexSearcher(spark, index)
+    # opened first: preloading installs a new complete record for the
+    # index, and the probing handle keeps the one it pinned
     s_probe = IndexSearcher(spark, index, preload_terms=0)
-    assert s_pre._term_map is not None and s_probe._term_map is None
+    s_pre = IndexSearcher(spark, index)
+    assert s_pre._dict.complete and not s_probe._dict.complete
     try:
         for text, mode in [
             ("w0001 w0042", "freetext"),

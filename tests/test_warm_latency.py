@@ -28,7 +28,7 @@ def index(spark, tmp_path_factory):
 
 def test_warm_search_is_one_spark_job(spark, index):
     s = IndexSearcher(spark, index)
-    assert s._term_map is not None, "toy dictionary must preload"
+    assert s._dict.complete, "toy dictionary must preload"
     s.search("charitable trust", k=10)  # warm the JVM/codegen paths
     sc = spark.sparkContext
     for i, (q, mode) in enumerate(
@@ -79,40 +79,80 @@ def test_warm_search_matches_run_queries(spark, index):
     s.close()
 
 
-def test_expand_fuzzy_covers_full_word_alphabet(spark, index):
+def test_fuzzy_candidates_cover_full_word_alphabet(spark, index):
     """ADVICE r04 (medium): the analyzer tokenizes \\w+, so dictionary
-    terms can contain '_' and non-ASCII word chars. The warm edit-1
-    expansion derives its alphabet FROM the pinned dictionary, so such
-    neighbors are found — and the generation path, the deletion-key dual,
-    and the brute within_edit1 scan must agree exactly."""
+    terms can contain '_' and non-ASCII word chars. The in-memory edit-1
+    expansion of a complete dictionary record derives its alphabet FROM
+    the record, so such neighbors are found — and the generation path,
+    the deletion-key dual, and the brute within_edit1 scan must agree
+    exactly."""
     from find_that_charity_spark.functions.fuzzy import within_edit1
+    from find_that_charity_spark.operators import query
 
     s = IndexSearcher(spark, index)
-    assert s._term_map is not None
-    # inject word-char terms the [a-z0-9] alphabet would miss
+    assert s._dict.complete
+    # a copy with word-char terms the [a-z0-9] alphabet would miss
+    rec = query._DictRecord(None, dict(s._dict.terms), complete=True)
+    s.close()
     for t in ["foo_bar", "cafés", "naïve"]:
-        s._term_map[t] = (0, 1)
-    s._alphabet = None  # force re-derivation from the patched map
-    s._del_index = None
+        rec.terms[t] = (0, 1)
 
     queries = ["foo_baz", "cafes", "café", "naive", "charitible"]
     brute = {
-        q: {u for u in s._term_map if within_edit1(u, q)} for q in queries
+        q: {u for u in rec.terms if within_edit1(u, q)} for q in queries
     }
-    gen = {q: s._expand_fuzzy([q]) for q in queries}
+    gen = {q: set(query._fuzzy_candidates(spark, index, [q], rec)) for q in queries}
     # underscore/é neighbors must be present (the r04 bug: silently missed)
     assert "foo_bar" in gen["foo_baz"]
     assert "cafés" in gen["cafes"]
     assert gen == brute
+    assert rec.del_index is None, "one-term calls generate over the alphabet"
 
     # the deletion-key dual (large-batch / large-alphabet route): same set
-    s._del_index = None
     big_batch = queries * 7  # >= _FUZZY_DUAL_MIN_TERMS terms
-    assert len(big_batch) >= s._FUZZY_DUAL_MIN_TERMS
-    dual_all = s._expand_fuzzy(big_batch)
+    assert len(big_batch) >= query._FUZZY_DUAL_MIN_TERMS
+    dual_all = set(query._fuzzy_candidates(spark, index, big_batch, rec))
     assert dual_all == set().union(*brute.values())
-    assert s._del_index is not None, "dual index must have been built"
-    s.close()
+    assert rec.del_index is not None, "dual index must have been built"
+
+
+def test_preloaded_record_expands_fuzzy_without_fuzzy_keys(spark, index, monkeypatch):
+    """While a preloading IndexSearcher is open, the index's dictionary
+    record is complete for every route: a fuzzy run_queries batch and a
+    spelling suggestion expand in memory, with no read of the fuzzy_keys
+    table, and answer exactly as the fuzzy_keys probe does."""
+    from find_that_charity_spark.operators import query, recon
+
+    reads = []
+    orig = query.cached_parquet
+
+    def counted(spark, path):
+        if path.endswith("fuzzy_keys"):
+            reads.append(path)
+        return orig(spark, path)
+
+    monkeypatch.setattr(query, "cached_parquet", counted)
+    qdf = spark.createDataFrame(
+        [("f0", "charitible", 10, "fuzzy"), ("f1", "trust w0001", 10, "fuzzy"),
+         ("f2", "acme fnd", 10, "fuzzy")],
+        "qid string, text string, k int, mode string",
+    )
+
+    def answers():
+        rows = sorted(tuple(r) for r in run_queries(spark, index, qdf).collect())
+        spell = [tuple(r) for r in recon.suggest_spelling(spark, index, "charitible").collect()]
+        return rows, spell
+
+    want = answers()  # no handle open: both calls probe fuzzy_keys
+    assert len(reads) == 2 and want[0] and want[1]
+    reads.clear()
+    s = IndexSearcher(spark, index)
+    try:
+        got = answers()
+    finally:
+        s.close()
+    assert reads == []
+    assert got == want
 
 
 def test_over_budget_search_is_one_job_and_same_answer(spark, index, monkeypatch):
